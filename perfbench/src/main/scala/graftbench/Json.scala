@@ -1,0 +1,34 @@
+package graftbench
+
+/** Minimal JSON rendering for the run record (Map, Seq, String, Boolean,
+  * numbers, null); keeps the benchmark free of extra dependencies. */
+object Json {
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => render(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(render).mkString("[", ",", "]")
+    case a: Array[_] => render(a.toSeq)
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"' => sb ++= "\\\""
+      case '\\' => sb ++= "\\\\"
+      case '\n' => sb ++= "\\n"
+      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
+      case c => sb += c
+    }
+    sb += '"'
+    sb.toString
+  }
+}
