@@ -268,25 +268,6 @@ object Bench {
       flagged
     }
     val quietDivergent = quietDivergentNow()
-    // ---- substitute refuted numbers ---------------------------------------
-    // An entry STILL >3x its calibration-normalized quiet twin after its
-    // own re-measure is a number this artifact's machinery has refuted —
-    // publishing it anyway (BENCH_r11 carried 10x contended values for 3
-    // rows its quiet check had already disproven) makes the headline
-    // top-20 lie to the next reader. Substitute the quiet twin (already
-    // normalized to THIS host via the calibration ratio) and name every
-    // substituted row in "quiet_substituted"; the contended measurements
-    // remain auditable in "runs".
-    val quietSubstituted: Seq[String] =
-      if (quietDivergent.isEmpty) Seq.empty
-      else {
-        // only `best`/`results` change; the raw measurement pairs in
-        // "runs" are untouched — they stay the audit trail for the
-        // substituted rows
-        quietDivergent.foreach { n => best += n -> quietQs(n) }
-        results = benchQueries.map(q => q.name -> best(q.name))
-        quietDivergent
-      }
     val noisyQueries = d.noisyQueries
     val crossSlow = d.crossSlow
     val crossFast = d.crossFast
@@ -330,10 +311,8 @@ object Bench {
       if (retriedAll.isEmpty) ""
       else s""","retried":${retriedAll.toSeq.sorted.map(jstr).mkString("[", ",", "]")}"""
     val quietJson =
-      (if (quietDivergent.isEmpty) ""
-       else s""","quiet_divergent":${quietDivergent.sorted.map(jstr).mkString("[", ",", "]")}""") +
-      (if (quietSubstituted.isEmpty) ""
-       else s""","quiet_substituted":${quietSubstituted.sorted.map(jstr).mkString("[", ",", "]")}""")
+      if (quietDivergent.isEmpty) ""
+      else s""","quiet_divergent":${quietDivergent.sorted.map(jstr).mkString("[", ",", "]")}"""
     val full = toJson(results, s""","runs":$spread$retriedJson$quietJson""")
     // The driver captures only the LAST ~2000 chars of the sbt log; the
     // full 100+-query map is ~3 KB, so a single fat line gets its head
@@ -356,9 +335,9 @@ object Bench {
         "entries measured >3x their quiet-artifact twin and were " +
         "re-measured" +
         (if (quietDivergent.nonEmpty)
-          s" — STILL divergent: ${quietDivergent.mkString(",")}; their " +
-            "refuted contended numbers were REPLACED by the calibration-" +
-            "normalized quiet twins (raw pairs remain in \"runs\")"
+          s" — STILL divergent: ${quietDivergent.mkString(",")}; the " +
+            "published numbers are the measured ones, flagged in " +
+            "\"quiet_divergent\""
          else " — re-measure brought all within band"))
     if (retried.nonEmpty)
       println(s"GRAFT_BENCH_RETRIED ${retried.size} flagged queries " +

@@ -1662,7 +1662,7 @@ object Similarity extends QueryModule {
     * bit-safe where "trained state isn't SQL-expressible" usually holds:
     *  - assignments only need the same ARGMAX, not the same cosine bits —
     *    the measured min top-2 cosine margin on the fixture is 3.4e-4
-    *    (k=4 after 2 Lloyd iterations; tools/ElbowMargin), ~10 orders
+    *    (k=4 after 2 Lloyd iterations, the tightest sweep point), ~10 orders
     *    above any double-summation reorder error, so both engines pick
     *    identical centroids for every vector;
     *  - every other step IS exact: seed = first-k float vectors, mean =

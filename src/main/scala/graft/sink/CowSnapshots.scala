@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   *     mixers), MINTED WITH THE GROUP: point-lookup metadata exists
   *     the instant the data does, never rebuilt (q439's lesson applied
   *     from birth).
-  *   - `manifest/c_N/` — version N's commit, one one-winner rename
-  *     claim ([[Fs.claim]]): one row PER SHARD = (version, shard, dir,
-  *     n_rows, batch_id). Readers resolve versions from the manifest
-  *     alone; a crash before the commit claim leaves invisible file
-  *     groups that the age-gated vacuum collects.
+  *   - `manifest/c_N/` — version N's commit on the [[VersionLog]]
+  *     protocol: one row PER SHARD = (version, shard, dir, n_rows,
+  *     seq, schema, routing, batch_id). A crash before the commit
+  *     claim leaves invisible file groups that the age-gated GC
+  *     collects.
   *
   * Unlike the rank-based round-robin kernel (which reshuffles every
   * row's shard when the corpus changes), shard routing here is
@@ -46,9 +46,7 @@ import org.apache.spark.sql.functions._
   * lease as the full-rewrite store. */
 object CowSnapshots {
 
-  private def manifestDir(root: String) = s"$root/manifest"
   private def filesDir(root: String) = s"$root/files"
-  private def lease(root: String) = s"${manifestDir(root)}/_lease"
 
   /** The key-stable routing kernel (exposed for specs and the
     * time-travel point lookup, which routes each probe to its one
@@ -75,84 +73,37 @@ object CowSnapshots {
     (((h % n) + n) % n).toInt
   }
 
-  private def commitSlots(s: SparkSession, root: String): Seq[String] =
-    Fs.listDirNames(s, manifestDir(root)).filter(_.startsWith("c_"))
-
-  /** The manifest row's flat schema — written and read DRIVER-SIDE
-    * ([[TinyParquet]]): manifest rows are driver-sized on both ends
-    * (shards x chain length), and the Spark-job round trip per
-    * commit/meta-read was pure per-publish overhead (the Delta-log
-    * discipline: transaction metadata is driver I/O, never a cluster
-    * job). */
-  private val manifestRowSchema: TinyParquet.Schema = Seq(
-    "version" -> "int", "shard" -> "int", "dir" -> "string",
-    "n_rows" -> "long", "seq" -> "int", "schema_ddl" -> "string",
-    "key_col" -> "string", "seed" -> "string", "n_shards" -> "int",
-    "batch_id" -> "string")
-
-  /** Committed versions from the SLOT LISTING alone — the slot name
-    * IS the version (claimed as `c_N`), so resolution is one
-    * metadata listing, zero Spark jobs, and always fresh. */
-  def committedVersions(s: SparkSession, root: String): Seq[Int] =
-    commitSlots(s, root).map(_.stripPrefix("c_").toInt).sorted
-
-  /** batch_id -> version over the committed slots; per-version rows
-    * come from the immutable-manifest cache, so a replay lookup costs
-    * one listing plus at most one read per NEVER-SEEN version. */
-  def committedBatchVersions(s: SparkSession, root: String)
-      : Map[String, Int] =
-    committedVersions(s, root)
-      .flatMap(v => meta(s, root, v).batchId.map(_ -> v)).toMap
-
-  /** One committed manifest, fully materialized. A c_N slot is
-    * IMMUTABLE once its one-winner claim lands (retirement deletes it
-    * wholesale, never edits it), so per-(root, version) caching is
-    * sound and collapses the storage verbs' metadata traffic — a
-    * lifecycle like q446's otherwise pays a separate tiny Spark job
-    * for every entries/schema/key-column lookup, dozens per query. A
-    * retired version stays gated by [[committedVersions]] (never
-    * cached — freshness is its contract), so a stale cache row is
-    * unreachable, not wrong. */
+  /** One committed manifest, fully materialized and cached by the
+    * [[VersionLog]] — a lifecycle like q446's otherwise pays a
+    * manifest read for every entries/schema/key-column lookup, dozens
+    * per query. */
   private final case class Meta(rows: Seq[(Int, String, Long, Int)],
       schemaDdl: String, keyCol: String, seed: String, nShards: Int,
       batchId: Option[String])
 
-  /** Keyed by (root, version, SLOT INCARNATION): a slot number can be
-    * reused across store incarnations — this driver's own
-    * wipe-and-rebuild (handled by the remove() on claim/retire) but
-    * also ANOTHER driver's, which this JVM never observes. The
-    * incarnation id is the slot's sorted child-file listing: every
-    * manifest write mints part files with fresh UUID names, so two
-    * incarnations of c_N can never alias — unlike an mtime key, which
-    * collapses on filesystems with coarse (e.g. 1 s) timestamp
-    * granularity when the wipe-and-rebuild lands inside one tick. One
-    * metadata listing per lookup, no Spark job. Rows whose incarnation
-    * was superseded are evicted on the next lookup of the same (root,
-    * version), so the cache never accumulates dead incarnations. */
-  private val metaCache = new java.util.concurrent
-    .ConcurrentHashMap[(String, Int, String), Meta]()
+  /** The manifest row's flat schema, one row per (shard, seq). */
+  private val log = new VersionLog[Meta](Seq(
+    "version" -> "int", "shard" -> "int", "dir" -> "string",
+    "n_rows" -> "long", "seq" -> "int", "schema_ddl" -> "string",
+    "key_col" -> "string", "seed" -> "string", "n_shards" -> "int",
+    "batch_id" -> "string"), _.batchId, rows => {
+    val h = rows.head
+    Meta(rows.map(r => (r(1).asInstanceOf[Int],
+        r(2).asInstanceOf[String], r(3).asInstanceOf[Long],
+        r(4).asInstanceOf[Int]))
+      .sortBy(e => (e._1, e._4)),
+      h(5).asInstanceOf[String], h(6).asInstanceOf[String],
+      h(7).asInstanceOf[String], h(8).asInstanceOf[Int],
+      Option(h(9).asInstanceOf[String]))
+  })
 
-  private def meta(s: SparkSession, root: String, v: Int): Meta = {
-    val inc = Fs.listNames(s, s"${manifestDir(root)}/c_$v")
-      .filter(_.endsWith(".parquet")).mkString(",")
-    metaCache.keySet.removeIf(k =>
-      k._1 == root && k._2 == v && k._3 != inc)
-    metaCache.computeIfAbsent((root, v, inc), _ => {
-      val rows = TinyParquet.read(s, s"${manifestDir(root)}/c_$v",
-        manifestRowSchema)
-      val h = rows.head
-      Meta(rows.map(r => (r(1).asInstanceOf[Int],
-          r(2).asInstanceOf[String], r(3).asInstanceOf[Long],
-          r(4).asInstanceOf[Int]))
-        .sortBy(e => (e._1, e._4)),
-        h(5).asInstanceOf[String], h(6).asInstanceOf[String],
-        h(7).asInstanceOf[String], h(8).asInstanceOf[Int],
-        Option(h(9).asInstanceOf[String]))
-    })
-  }
+  /** Committed versions, ascending. */
+  def committedVersions(s: SparkSession, root: String): Seq[Int] =
+    VersionLog.versions(s, root)
 
-  private def dropCached(root: String, v: Int): Unit =
-    metaCache.keySet.removeIf(k => k._1 == root && k._2 == v): Unit
+  /** batch_id -> version over the committed versions. */
+  def committedBatchVersions(s: SparkSession, root: String)
+      : Map[String, Int] = log.batchVersions(s, root)
 
   /** Version `v`'s manifest entries: (shard, dir, n_rows), sorted by
     * shard. Empty shards have no entry. A flat (copy-on-write-only)
@@ -161,17 +112,17 @@ object CowSnapshots {
     * use [[allEntries]] when the apply order matters. */
   def entries(s: SparkSession, root: String, v: Int)
       : Seq[(Int, String, Long)] =
-    meta(s, root, v).rows.map(e => (e._1, e._2, e._3))
+    log.meta(s, root, v).rows.map(e => (e._1, e._2, e._3))
 
   /** [[entries]] with the merge-on-read sequence number: (shard, dir,
     * n_rows, seq). seq 0 is the shard's base group; seq 1..k are its
     * delta groups in APPLY ORDER (latest wins per key at read time). */
   def allEntries(s: SparkSession, root: String, v: Int)
-      : Seq[(Int, String, Long, Int)] = meta(s, root, v).rows
+      : Seq[(Int, String, Long, Int)] = log.meta(s, root, v).rows
 
   /** The key column recorded at commit (resolution needs it). */
   def versionKeyCol(s: SparkSession, root: String, v: Int): String =
-    meta(s, root, v).keyCol
+    log.meta(s, root, v).keyCol
 
   /** The routing (seed, nShards) recorded at commit — table
     * properties, the Delta-log discipline: maintenance verbs like
@@ -179,7 +130,7 @@ object CowSnapshots {
     * manifest instead of trusting a caller to repeat it. */
   def versionRouting(s: SparkSession, root: String, v: Int)
       : (String, Int) = {
-    val m = meta(s, root, v)
+    val m = log.meta(s, root, v)
     (m.seed, m.nShards)
   }
 
@@ -193,7 +144,7 @@ object CowSnapshots {
   def versionSchema(s: SparkSession, root: String, v: Int)
       : org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
-      meta(s, root, v).schemaDdl)
+      log.meta(s, root, v).schemaDdl)
 
   /** Build one immutable file group from a frame that already carries
     * a `shard` column; returns (tok, per-shard row counts). The
@@ -221,81 +172,82 @@ object CowSnapshots {
       : (String, Map[Int, Long]) = {
     val s = df.sparkSession
     import s.implicits._
-    val tok = java.util.UUID.randomUUID().toString.take(12)
-    val staged = s"$root/_staging/$tok"
-    val order = (col("shard") +: sortColumns.map(col)) :+ col(keyCol)
-    // per-shard counts ride the WRITE job as an Observation (one sum
-    // per candidate shard id — the caller knows the routing domain)
-    // instead of a separate count job re-reading the staged bytes:
-    // same counts, one job and one whole-group scan fewer per publish
-    // (guide §1.2 — every version mint pays this). The observe sits
-    // ABOVE the exchange, where it has always been: under the old
-    // range partitioning a metrics node below the exchange was also
-    // evaluated by the bounds-sampling pass and double-counted
-    // (measured: exactly-2x); the exact exchange has no sampling
-    // pass, but the position costs nothing and stays safe against
-    // any future re-introduction of range partitioning. The in-file
-    // sort applies after the pass-through metrics node — layout
-    // unchanged.
-    val obs = new org.apache.spark.sql.Observation(
-      "group_audit_" + tok)
-    val audits = candShards.map(k =>
-      sum(when($"shard" === k, 1L).otherwise(0L)).as(s"n_$k"))
-    // ONE write shape for every group build: the exact
-    // one-task-per-shard exchange ([[ShardExchange]]) — the layout
-    // range partitioning gave, minus the bounds-SAMPLING pass that
-    // evaluated the whole child plan a SECOND time (the entire
-    // touched-shard read + anti-join, for a merge). This replaced two
-    // earlier shapes: repartitionByRange (the sampling double-eval)
-    // and a known-tiny coalesce(1) path (which existed only to dodge
-    // that sampling, and SERIALIZED parquet file creation — a capped
-    // 56k-row merge writing ~112 files in one task measured slower
-    // than the parallel exchange). Empty candidate shards cost one
-    // empty task and write nothing.
-    val arranged = ShardExchange.exact(df, candShards, $"shard")
-    arranged
-      .observe(obs, audits.head, audits.tail: _*)
-      .sortWithinPartitions(order: _*)
-      .write.partitionBy("shard")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite").parquet(staged)
-    val metrics = obs.get
-    val counts: Map[Int, Long] = candShards.flatMap { k =>
-      metrics.get(s"n_$k") match {
-        case Some(n: Long) if n > 0L => Some(k -> n)
-        case _ => None
-      }
-    }.toMap
-    // ---- bloom/zone-map mint over the staged bytes ---------------------
-    // The per-(file) rows are driver-sized metadata (one row per
-    // physical file), so the WRITE is always driver-side TinyParquet
-    // (same Spark-readable bytes, no committer job per publish). The
-    // AGGREGATION stays a Spark job for big groups — it scans every row
-    // — but a KNOWN-TINY group (the delta-append path, which already
-    // counted its rows) is read back driver-side instead: zero Spark
-    // jobs for the whole mint (guide §1.2 — every delta publish paid a
-    // read-back scan job + a coalesce(1) write job here). Integral-typed
-    // key/stat columns only on the driver path (the contract of these
-    // stores); anything else falls back to the Spark aggregation.
-    val statCols = df.schema.fields.filter { f =>
-      f.name != "shard" && integralType(f.dataType)
-    }.map(_.name).toIndexedSeq
-    val keyIntegral = df.schema.fields
-      .find(_.name == keyCol).exists(f => integralType(f.dataType))
-    // the driver fold wins only at TRUE delta sizes: the example-API
-    // row reader is serial and object-per-row (measured ~3.5 s on a
-    // 56k-row capped merge vs ~0.3 s for the parallel Spark
-    // aggregation) — gate it to a few thousand rows, where it costs
-    // milliseconds and removes the mint's scan job outright
-    val bloomRows: Seq[Seq[Any]] =
-      if (knownRows.exists(_ <= 5000L) && keyIntegral)
-        mintRowsDriverSide(s, staged, keyCol, statCols)
-      else
-        mintRowsSpark(s, staged, keyCol, statCols)
-    TinyParquet.write(s, s"$staged/_bloom", bloomRowSchema, bloomRows,
-      overwrite = true)
-    Fs.move(s, staged, s"${filesDir(root)}/$tok")
-    (tok, counts)
+    VersionLog.stage(root) { staged =>
+      val tok = staged.substring(staged.lastIndexOf('/') + 1)
+      val order = (col("shard") +: sortColumns.map(col)) :+ col(keyCol)
+      // per-shard counts ride the WRITE job as an Observation (one sum
+      // per candidate shard id — the caller knows the routing domain)
+      // instead of a separate count job re-reading the staged bytes:
+      // same counts, one job and one whole-group scan fewer per publish
+      // (guide §1.2 — every version mint pays this). The observe sits
+      // ABOVE the exchange, where it has always been: under the old
+      // range partitioning a metrics node below the exchange was also
+      // evaluated by the bounds-sampling pass and double-counted
+      // (measured: exactly-2x); the exact exchange has no sampling
+      // pass, but the position costs nothing and stays safe against
+      // any future re-introduction of range partitioning. The in-file
+      // sort applies after the pass-through metrics node — layout
+      // unchanged.
+      val obs = new org.apache.spark.sql.Observation(
+        "group_audit_" + tok)
+      val audits = candShards.map(k =>
+        sum(when($"shard" === k, 1L).otherwise(0L)).as(s"n_$k"))
+      // ONE write shape for every group build: the exact
+      // one-task-per-shard exchange ([[ShardExchange]]) — the layout
+      // range partitioning gave, minus the bounds-SAMPLING pass that
+      // evaluated the whole child plan a SECOND time (the entire
+      // touched-shard read + anti-join, for a merge). This replaced two
+      // earlier shapes: repartitionByRange (the sampling double-eval)
+      // and a known-tiny coalesce(1) path (which existed only to dodge
+      // that sampling, and SERIALIZED parquet file creation — a capped
+      // 56k-row merge writing ~112 files in one task measured slower
+      // than the parallel exchange). Empty candidate shards cost one
+      // empty task and write nothing.
+      val arranged = ShardExchange.exact(df, candShards, $"shard")
+      arranged
+        .observe(obs, audits.head, audits.tail: _*)
+        .sortWithinPartitions(order: _*)
+        .write.partitionBy("shard")
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .mode("overwrite").parquet(staged)
+      val metrics = obs.get
+      val counts: Map[Int, Long] = candShards.flatMap { k =>
+        metrics.get(s"n_$k") match {
+          case Some(n: Long) if n > 0L => Some(k -> n)
+          case _ => None
+        }
+      }.toMap
+      // ---- bloom/zone-map mint over the staged bytes ---------------------
+      // The per-(file) rows are driver-sized metadata (one row per
+      // physical file), so the WRITE is always driver-side TinyParquet
+      // (same Spark-readable bytes, no committer job per publish). The
+      // AGGREGATION stays a Spark job for big groups — it scans every row
+      // — but a KNOWN-TINY group (the delta-append path, which already
+      // counted its rows) is read back driver-side instead: zero Spark
+      // jobs for the whole mint (guide §1.2 — every delta publish paid a
+      // read-back scan job + a coalesce(1) write job here). Integral-typed
+      // key/stat columns only on the driver path (the contract of these
+      // stores); anything else falls back to the Spark aggregation.
+      val statCols = df.schema.fields.filter { f =>
+        f.name != "shard" && integralType(f.dataType)
+      }.map(_.name).toIndexedSeq
+      val keyIntegral = df.schema.fields
+        .find(_.name == keyCol).exists(f => integralType(f.dataType))
+      // the driver fold wins only at TRUE delta sizes: the example-API
+      // row reader is serial and object-per-row (measured ~3.5 s on a
+      // 56k-row capped merge vs ~0.3 s for the parallel Spark
+      // aggregation) — gate it to a few thousand rows, where it costs
+      // milliseconds and removes the mint's scan job outright
+      val bloomRows: Seq[Seq[Any]] =
+        if (knownRows.exists(_ <= 5000L) && keyIntegral)
+          mintRowsDriverSide(s, staged, keyCol, statCols)
+        else
+          mintRowsSpark(s, staged, keyCol, statCols)
+      TinyParquet.write(s, s"$staged/_bloom", bloomRowSchema, bloomRows,
+        overwrite = true)
+      Fs.move(s, staged, s"${filesDir(root)}/$tok")
+      (tok, counts)
+    }
   }
 
   private def integralType(t: org.apache.spark.sql.types.DataType)
@@ -402,88 +354,31 @@ object CowSnapshots {
       }
   }
 
-  /** Claim the next version slot for `rows` (one manifest row per
-    * shard, all carrying the version's recorded schema). The whole
-    * commit — latest-version resolution, parent validation, staged
-    * manifest write, group-existence probes, claim — runs under ONE
-    * hold of the manifest lease, the same arbiter the GC's deletes
-    * take:
-    *
-    *   - every referenced file group must still exist (`_SUCCESS`-
-    *     probed, so a directory some other writer merely re-created
-    *     cannot satisfy it) — a merge that planned against a version
-    *     the GC retired mid-flight aborts LOUDLY instead of
-    *     committing a version with missing files;
-    *   - when `expectedParent` is set (every DERIVED publish: merge,
-    *     delta append, compaction), the latest committed version must
-    *     still BE that parent — a concurrent commit that advanced the
-    *     store means this publish was derived from stale state, and
-    *     blindly taking the next slot would silently revert the
-    *     intervening version's changes (the lost update Delta/Iceberg
-    *     abort on). The caller re-derives against the new latest and
-    *     retries; only parent-independent full publishes
-    *     ([[writeVersion]]) keep the blind slot-bump.
-    *
-    * The manifest rows are a handful of KBs, so staging them inside
-    * the lease costs microseconds of extra hold time and buys the
-    * check-then-claim atomicity. Returns the committed version. */
+  /** Commit `rows` (one manifest row per shard, all carrying the
+    * version's recorded schema) as the next version through
+    * [[VersionLog.commit]], guarded on every referenced group's
+    * `_SUCCESS` (a merge that planned against a version the GC retired
+    * mid-flight aborts LOUDLY instead of committing missing files).
+    * `expectedParent` is set by every DERIVED publish (merge, delta
+    * append, compaction); only parent-independent full publishes
+    * ([[writeVersion]]) take the blind next slot. Returns the
+    * committed version. */
   private def commitRows(s: SparkSession, root: String,
       rows: Seq[(Int, String, Long, Int)], schemaDdl: String,
       keyCol: String, seed: String, nShards: Int,
       batchId: Option[String], expectedParent: Option[Int] = None): Int = {
-    import s.implicits._
     require(rows.nonEmpty,
       s"refusing to commit an EMPTY manifest under $root — a zero-row " +
         "publish would mint a version no reader can resolve metadata " +
         "for; publish at least one row")
-    val ctokBase = s"$root/_staging/c_" +
-      java.util.UUID.randomUUID().toString.take(12)
-    val v = Fs.withLease(s, lease(root)) {
-      val latest = committedVersions(s, root).lastOption.getOrElse(0)
-      expectedParent.foreach { p =>
-        require(latest == p,
-          s"store advanced to v$latest while this publish was derived " +
-            s"against v$p — committing would silently revert " +
-            s"v${p + 1}..v$latest (lost update); re-derive against " +
-            "the new latest and retry")
-      }
-      rows.map(_._2).distinct.foreach { d =>
-        require(Fs.exists(s, s"${filesDir(root)}/$d/_SUCCESS"),
-          s"file group $d vanished before commit (expired " +
-            "mid-merge?) — aborting; retry against the new latest")
-      }
-      var vTry = latest + 1
-      var attempts = 0
-      var done = false
-      while (!done) {
-        TinyParquet.write(s, ctokBase, manifestRowSchema,
-          rows.map { case (sh, dir, n, seq) =>
-            Seq(vTry, sh, dir, n, seq, schemaDdl, keyCol, seed,
-              nShards, batchId.orNull) },
-          overwrite = true)
-        done = Fs.claim(s, ctokBase, s"${manifestDir(root)}/c_$vTry")
-        if (!done) { vTry += 1; attempts += 1 }
-        require(attempts < 10000,
-          s"could not claim a version under $root")
-      }
-      vTry
+    log.commit(s, root, at = None,
+      guards = rows.map(_._2).distinct
+        .map(d => s"${filesDir(root)}/$d/_SUCCESS"),
+      expectedParent = expectedParent) { v =>
+      rows.map { case (sh, dir, n, seq) =>
+        Seq(v, sh, dir, n, seq, schemaDdl, keyCol, seed, nShards,
+          batchId.orNull) }
     }
-    // a slot number can be REUSED across store incarnations (a test
-    // harness clearing and rebuilding the same root, or expire
-    // followed by fresh commits) — a landed claim is the one event
-    // that makes any previously-cached (root, v) stale in THIS driver
-    // (another driver's reuse is covered by the incarnation cache key).
-    // The just-committed manifest is fully in hand, so pre-populate the
-    // cache with it: the next entries/schema/key lookup over this
-    // version costs a listing and zero Spark jobs.
-    dropCached(root, v)
-    metaCache.put((root, v,
-        Fs.listNames(s, s"${manifestDir(root)}/c_$v")
-          .filter(_.endsWith(".parquet")).mkString(",")),
-      Meta(rows.map(r => (r._1, r._2, r._3, r._4))
-          .sortBy(e => (e._1, e._4)),
-        schemaDdl, keyCol, seed, nShards, batchId))
-    v
   }
 
   /** Publish `docs` as the next full version (every shard written).
@@ -949,14 +844,12 @@ object CowSnapshots {
     * against a version this expire retires either commits first (its
     * new version's references are visible to the re-check and spared)
     * or finds its groups gone and aborts loudly — never a committed
-    * version with missing files, from any driver. One lease hold +
-    * one reference-set computation for the whole batch (not one per
-    * orphan). Crashed writers' never-referenced groups and staging
-    * leftovers are vacuumed past `orphanTtlMs` of age (a younger
-    * unreferenced group may be an in-flight commit). Returns the
-    * retired versions. */
-  def expireVersions(s: SparkSession, root: String, keep: Int,
-      orphanTtlMs: Long = 3600000L): Seq[Int] = {
+    * version with missing files, from any driver. Crashed writers'
+    * never-referenced groups are vacuumed past
+    * [[VersionLog.OrphanTtlMs]] of age (a younger unreferenced group
+    * may be an in-flight commit), staging leftovers by
+    * [[VersionLog.vacuumStaging]]. Returns the retired versions. */
+  def expireVersions(s: SparkSession, root: String, keep: Int): Seq[Int] = {
     require(keep >= 1, s"keep must be >= 1 (got $keep)")
     val committed = committedVersions(s, root)
     val retired = committed.dropRight(keep)
@@ -967,12 +860,9 @@ object CowSnapshots {
     // gate needed (an in-flight writer's group is never in this set)
     val refsRetired = retired
       .flatMap(v => entries(s, root, v).map(_._2)).toSet
-    retired.foreach { v =>
-      Fs.delete(s, s"${manifestDir(root)}/c_$v")
-      dropCached(root, v)
-    }
+    retired.foreach(log.retire(s, root, _))
     val now = System.currentTimeMillis()
-    Fs.withLease(s, lease(root)) {
+    VersionLog.withLease(s, root) {
       // the reference set of everything committed RIGHT NOW — a merge
       // that committed after the retire above is visible here and its
       // groups (including re-listed ones) are spared
@@ -981,20 +871,14 @@ object CowSnapshots {
       Fs.listDirNames(s, filesDir(root))
         .filterNot(live.contains)
         .foreach { d =>
-          val aged = now - Fs.modTime(s, s"${filesDir(root)}/$d") >=
-            orphanTtlMs
+          val p = s"${filesDir(root)}/$d"
           // never-referenced groups get the age gate (an in-flight
           // writer's group exists before its manifest claim)
-          if (refsRetired.contains(d) || aged)
-            Fs.delete(s, s"${filesDir(root)}/$d")
+          if (refsRetired.contains(d) || VersionLog.aged(s, p, now))
+            Fs.delete(s, p)
         }
     }
-    // staging leftovers, same age gate (outside the lease — staging is
-    // never referenced by a manifest)
-    Fs.listDirNames(s, s"$root/_staging")
-      .map(n => s"$root/_staging/$n")
-      .filter(p => now - Fs.modTime(s, p) >= orphanTtlMs)
-      .foreach(Fs.delete(s, _))
+    VersionLog.vacuumStaging(s, root)
     retired
   }
 

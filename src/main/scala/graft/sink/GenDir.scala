@@ -61,30 +61,21 @@ object GenDir {
     * through the same one claim. */
   def publishStaged(s: SparkSession, root: String,
       markers: Seq[String] = Nil)(write: String => Unit): Unit = {
-    val tok = java.util.UUID.randomUUID().toString.take(12)
-    val staged = s"$root/_staging/$tok"
-    write(staged)
-    // markers (e.g. the applied-batch ledger) ride INSIDE the staged
-    // generation, so state and ledger commit in the SAME rename
-    markers.foreach(m => Fs.touch(s, s"$staged/$m"))
-    var n = gens(s, root).lastOption.getOrElse(0) + 1
-    var attempts = 0
-    while (!Fs.claim(s, staged, s"$root/g_$n")) {
-      n += 1; attempts += 1
-      require(attempts < 10000, s"could not claim a generation under $root")
+    VersionLog.stage(root) { staged =>
+      write(staged)
+      // markers (e.g. the applied-batch ledger) ride INSIDE the staged
+      // generation, so state and ledger commit in the SAME rename
+      markers.foreach(m => Fs.touch(s, s"$staged/$m"))
+      VersionLog.claimNext(root, "generation",
+        gens(s, root).lastOption.getOrElse(0) + 1)(
+        n => Fs.claim(s, staged, s"$root/g_$n"))
     }
     // lagging GC: keep N and N-1 (a reader that resolved just before
     // this publish still reads complete bytes); drop everything older
     gens(s, root).dropRight(2).foreach(o => Fs.delete(s, s"$root/g_$o"))
-    // crashed publishes' staging leftovers — AGE-GATED like every
-    // other staging vacuum in the storage layer: a concurrent
-    // publisher's fully-staged, not-yet-claimed generation must land
-    // next, not vanish under it mid-claim
-    val now = System.currentTimeMillis()
-    Fs.listDirNames(s, s"$root/_staging").filterNot(_ == tok)
-      .map(o => s"$root/_staging/$o")
-      .filter(p => now - Fs.modTime(s, p) >= 3600000L)
-      .foreach(Fs.delete(s, _))
+    // crashed publishes' staging leftovers: age-gated, so a concurrent
+    // publisher's staged, not-yet-claimed generation lands next
+    VersionLog.vacuumStaging(s, root)
   }
 
   /** Append rows INTO the current generation (parquet append —

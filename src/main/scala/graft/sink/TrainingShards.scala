@@ -152,106 +152,27 @@ object TrainingShards {
 
   // ——— Versioned snapshots (time travel, q424/q426/q427/q428) ———
   //
-  // The lakehouse commit protocol in its smallest honest form: data for
-  // version N is built in a staging directory, CLAIMED into `path/v=N/`
-  // by a one-winner rename, then ONE commit directory `manifest/c_N`
-  // (a single parquet row: version, n_rows, batch_id) is claimed the
-  // same way. Readers resolve snapshots from the MANIFEST ALONE, so a
-  // version exists exactly when its commit row landed — a crash between
-  // the data claim and the manifest claim leaves an orphan `v=N`
-  // directory that NO reader can see (retention vacuums it once later
-  // commits prove it can never commit). Because both the data slot and
-  // the commit slot are rename-if-absent claims, two CONCURRENT writers
-  // can never share a version: the claim loser advances to the next
-  // slot by RENAMING its already-built staging directory — no rewrite,
-  // no torn data (q427 races two real writer threads through the
-  // worst-case interleave and grades it). Pinning version k keeps
-  // returning k's bytes forever, regardless of how many snapshots
-  // commit after it — the property training-data provenance actually
-  // needs (re-run an eval against the exact corpus a model saw). At
-  // 100 TB the manifest is one directory per VERSION, not per file:
-  // resolution is a metadata listing.
+  // Full-rewrite versions on the [[VersionLog]] protocol: data for
+  // version N is built in staging and CLAIMED into `path/v=N/`, then
+  // `manifest/c_N` (one row: version, n_rows, batch_id) commits it. A
+  // crash between the two claims leaves an orphan `v=N` no reader can
+  // see. Pinning version k keeps returning k's bytes forever — the
+  // property training-data provenance needs (re-run an eval against
+  // the exact corpus a model saw).
 
-  private def manifestDir(path: String) = s"$path/manifest"
+  /** The commit row's flat schema, decoded to the row's batch id. */
+  private val log = new VersionLog[Option[String]](
+    Seq("version" -> "int", "n_rows" -> "long", "batch_id" -> "string"),
+    identity, rows => Option(rows.head(2).asInstanceOf[String]))
 
-  /** Active writers' staging directories in THIS driver — lets expiry
-    * vacuum crashed writers' staging leftovers without touching an
-    * in-flight build (cross-driver staging is covered by the same
-    * maintenance-window caveat as the orphan vacuum). */
-  private val activeStaging =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Commit slots with a committed row. A slot exists only if its c_N
-    * directory arrived by the one-winner rename (so it is complete);
-    * gating the read on the SLOT listing — not on the bare manifest
-    * directory — means a crash between Fs.claim's mkdirs(manifest) and
-    * its rename (first commit on a fresh root) leaves an empty
-    * manifest directory that still reads as "no versions", not as a
-    * permanently unreadable store. */
-  private def commitSlots(s: SparkSession, path: String): Seq[String] =
-    Fs.listDirNames(s, manifestDir(path)).filter(_.startsWith("c_"))
-
-  /** The commit row's flat schema — written and read DRIVER-SIDE
-    * ([[TinyParquet]]): a manifest row is driver-sized metadata on
-    * both ends, and the Spark-job round trip it used to take was pure
-    * per-publish overhead (the Delta-log discipline: transaction
-    * metadata is driver I/O, never a cluster job). */
-  private val commitRowSchema: TinyParquet.Schema =
-    Seq("version" -> "int", "n_rows" -> "long", "batch_id" -> "string")
-
-  /** Versions with a committed manifest row (empty for a fresh root).
-    * Resolved from the SLOT LISTING alone — the slot name IS the
-    * version (claimed as `c_N`, carrying one row whose `version` = N),
-    * so resolution is one metadata listing and zero Spark jobs (the
-    * CowSnapshots discipline; previously every call paid a tiny
-    * manifest-read job, dozens per lifecycle query). Existence-gated
-    * through [[Fs]], not a caught AnalysisException — a failed read
-    * would spam benign PATH_NOT_FOUND ERROR stacks through the
-    * listener bus on every fresh root. */
+  /** Versions with a committed manifest row (empty for a fresh root). */
   def committedVersions(s: SparkSession, path: String): Seq[Int] =
-    commitSlots(s, path).map(_.stripPrefix("c_").toInt).sorted
-
-  /** One committed slot's (version, batch_id), cached per (path, slot,
-    * SLOT INCARNATION) — a c_N slot is immutable once claimed
-    * (retirement deletes it wholesale), and the incarnation key (the
-    * slot's sorted part-file listing; every manifest write mints fresh
-    * UUID part names) makes a recycled slot number a NEW cache key, so
-    * a wipe-and-rebuild or expire-reclaim — this driver's or another's
-    * — can never serve a stale row (the CowSnapshots metaCache
-    * discipline). First lookup per never-seen slot costs one tiny
-    * read; [[writeVersion]] pre-populates its own commit, so the
-    * common replay lookup costs a listing and zero jobs. */
-  private val slotCache = new java.util.concurrent
-    .ConcurrentHashMap[(String, String, String), (Int, Option[String])]()
-
-  private def slotIncarnation(s: SparkSession, path: String,
-      slot: String): String =
-    Fs.listNames(s, s"${manifestDir(path)}/$slot")
-      .filter(_.endsWith(".parquet")).mkString(",")
-
-  private def slotMeta(s: SparkSession, path: String, slot: String)
-      : (Int, Option[String]) = {
-    val inc = slotIncarnation(s, path, slot)
-    slotCache.keySet.removeIf(k =>
-      k._1 == path && k._2 == slot && k._3 != inc)
-    slotCache.computeIfAbsent((path, slot, inc), _ => {
-      val r = TinyParquet.read(s, s"${manifestDir(path)}/$slot",
-        commitRowSchema).head
-      (r(0).asInstanceOf[Int], Option(r(2).asInstanceOf[String]))
-    })
-  }
-
-  private def dropCachedSlot(path: String, slot: String): Unit =
-    slotCache.keySet.removeIf(k => k._1 == path && k._2 == slot): Unit
+    VersionLog.versions(s, path)
 
   /** batch_id -> version for every committed row that carries an id
     * (rows from id-less [[writeVersion]] calls are skipped). */
   def committedBatchVersions(s: SparkSession, path: String)
-      : Map[String, Int] =
-    commitSlots(s, path).flatMap { slot =>
-      val (v, id) = slotMeta(s, path, slot)
-      id.map(_ -> v)
-    }.toMap
+      : Map[String, Int] = log.batchVersions(s, path)
 
   /** Write `docs` as the next snapshot version under `path` and commit
     * it to the manifest (staged data build, one-winner data claim, then
@@ -260,13 +181,9 @@ object TrainingShards {
     * commit row is not — the snapshot must stay invisible.
     *
     * Concurrency: any number of writers may call this against one root.
-    * Each builds its data in a private staging directory, then claims
-    * `v=N` by rename-if-absent ([[Fs.claim]]); a lost claim advances to
-    * the next slot by renaming the SAME staged bytes — versions are
-    * never shared, loser data is never torn, and an orphan directory
-    * from a crashed writer is skipped over, never overwritten. The
-    * commit claim after a won data claim cannot lose (the data slot
-    * already has exactly one owner).
+    * The data claim takes the next free `v=N` ([[VersionLog.claimNext]]);
+    * the commit claim then takes exactly `c_N` and cannot lose (the
+    * data slot already has exactly one owner) — losing it fails loudly.
     *
     * `batchId` makes the commit IDEMPOTENT per producer batch — the
     * exactly-once hook for streaming writers: the manifest row carries
@@ -298,8 +215,6 @@ object TrainingShards {
       bloomKeyCol: Option[String] = None,
       preClaim: () => Unit = () => ()): Int = {
     val s = docs.sparkSession
-    import s.implicits._
-    val tok = java.util.UUID.randomUUID().toString.take(12)
     val replayOf: Option[Int] = batchId.flatMap { id =>
       committedBatchVersions(s, path).get(id)
     }
@@ -309,10 +224,8 @@ object TrainingShards {
         // the bytes this deterministic rebuild would produce. Heal path
         // for a slot a pre-hardening crash left empty: rebuild in
         // staging and claim it back (one rename, never a visible tear)
-        if (!Fs.exists(s, s"$path/v=$v")) {
-          val staged = s"$path/_staging/replay_$tok"
-          activeStaging.add(staged)
-          try {
+        if (!Fs.exists(s, s"$path/v=$v"))
+          VersionLog.stage(path, "replay_") { staged =>
             write(docs, staged, seed, nShards, maxRecordsPerFile,
               sortColumns)
             // the bloom mint runs ONLY when THIS call won the heal
@@ -324,108 +237,61 @@ object TrainingShards {
             if (Fs.claim(s, staged, s"$path/v=$v"))
               bloomKeyCol.foreach(k => BloomManifest.mint(s,
                 s"$path/v=$v/_bloom", s"$path/v=$v", k))
-          } finally activeStaging.remove(staged)
-        }
+          }
         v
       case None =>
-        val staged = s"$path/_staging/$tok"
-        val ctok = s"$path/_staging/c_$tok"
-        activeStaging.add(staged); activeStaging.add(ctok)
-        try {
+        VersionLog.stage(path) { staged =>
           val audit = write(docs, staged, seed, nShards,
             maxRecordsPerFile, sortColumns)
           val nRows = audit.map(_._2).sum
           preClaim()
-          var v = committedVersions(s, path).lastOption.getOrElse(0) + 1
-          var attempts = 0
-          while (!Fs.claim(s, staged, s"$path/v=$v")) {
-            // lost the race (or the slot holds a crashed writer's
-            // orphan): advance — the staged bytes just rename again
-            v += 1
-            attempts += 1
-            require(attempts < 10000,
-              s"could not claim a version under $path")
-          }
+          val v = VersionLog.claimNext(path, "version",
+            committedVersions(s, path).lastOption.getOrElse(0) + 1)(
+            n => Fs.claim(s, staged, s"$path/v=$n"))
           // the bloom manifest rides INSIDE the claimed slot, minted
           // before the commit claim: file paths are final, and no
           // reader can resolve a version whose manifest is missing
           bloomKeyCol.foreach(k => BloomManifest.mint(s,
             s"$path/v=$v/_bloom", s"$path/v=$v", k))
-          if (commit) {
-            TinyParquet.write(s, ctok, commitRowSchema,
-              Seq(Seq(v, nRows, batchId.orNull)), overwrite = true)
-            // the commit claim carries the data slot as its GUARD,
-            // checked under the same lock the vacuum deletes under
-            // (same-driver serialization), and the whole claim runs
-            // under the manifest LEASE — the cross-driver arbiter the
-            // vacuum's deletes also take, so a vacuumed data slot can
-            // never gain a commit row from ANY driver; the failure
-            // mode stays a loud aborted commit
-            // the guard probes the write committer's _SUCCESS marker,
-            // not the bare directory: the bloom mint above re-creates
-            // `v=N/` if a concurrent vacuum collected the slot (its
-            // parquet write remakes parent dirs), and a bare-path
-            // guard would then pass on a directory holding only
-            // `_bloom` — committing a version whose data is gone.
-            // _SUCCESS only ever exists if the claimed DATA survived.
-            Fs.withLease(s, s"${manifestDir(path)}/_lease") {
-              require(Fs.claim(s, ctok, s"${manifestDir(path)}/c_$v",
-                  guard = Some(s"$path/v=$v/_SUCCESS")),
-                s"commit slot c_$v already owned — data claim was not " +
-                  "exclusive")
-            }
-            // pre-populate the slot cache with the row just committed
-            // (known in hand) so replay lookups over this root cost a
-            // listing and zero Spark jobs
-            dropCachedSlot(path, s"c_$v")
-            slotCache.put(
-              (path, s"c_$v", slotIncarnation(s, path, s"c_$v")),
-              (v, batchId)): Unit
-          }
+          // the guard probes the write committer's _SUCCESS marker,
+          // not the bare directory: the bloom mint above re-creates
+          // `v=N/` if a concurrent vacuum collected the slot (its
+          // parquet write remakes parent dirs), and a bare-path guard
+          // would then pass on a directory holding only `_bloom` —
+          // committing a version whose data is gone. _SUCCESS only
+          // ever exists if the claimed DATA survived.
+          if (commit)
+            log.commit(s, path, at = Some(v),
+              guards = Seq(s"$path/v=$v/_SUCCESS"))(
+              n => Seq(Seq(n, nRows, batchId.orNull)))
           v
-        } finally {
-          activeStaging.remove(staged); activeStaging.remove(ctok)
         }
     }
   }
 
   /** Retire all but the newest `keep` committed versions, then vacuum
-    * permanently-invisible orphan data directories. Returns every
-    * version whose data was removed, sorted.
-    *
-    * Ordering per retired version: the manifest commit row is deleted
-    * FIRST, then the data directory — a crash mid-expire can leave an
-    * invisible orphan (healed by the next expire's vacuum) but never a
-    * committed version whose data is gone, so readers that resolve
-    * from the manifest stay sound at every intermediate state. A
-    * surviving version's bytes are never touched: a reader pinned to
-    * it reads identically across the expire (q428 grades both).
+    * permanently-invisible orphan data directories and aged staging
+    * ([[VersionLog.vacuumStaging]]). Returns every version whose data
+    * was removed, sorted. A surviving version's bytes are never
+    * touched: a reader pinned to it reads identically across the
+    * expire (q428 grades both).
     *
     * Vacuum rule: a claimed-but-uncommitted `v=K` BELOW the newest
     * committed version can never commit (the commit claim happens
     * immediately after the data claim in [[writeVersion]]), so it is
     * garbage; an orphan ABOVE the newest commit may be an in-flight
-    * writer between its two claims and is left alone.
-    *
-    * Concurrency: each orphan delete re-checks "still uncommitted"
-    * under the claim lock AND the manifest lease — the same two
-    * arbiters writeVersion's commit claim takes — so vacuum and commit
-    * serialize within one driver (lock) and across drivers (lease
-    * file, atomic create): a slot is either vacuumed before its commit
-    * (which then aborts loudly) or committed before the re-check
-    * (which then spares it); never both, never a committed version
-    * whose data is gone. Crashed writers' staging leftovers are
-    * vacuumed only past `stagingTtlMs` of mtime age (and never this
-    * driver's live builds) — a live CROSS-driver writer's in-flight
-    * staging is spared instead of silently destroyed mid-write. */
-  def expireVersions(s: SparkSession, path: String, keep: Int,
-      stagingTtlMs: Long = 3600000L): Seq[Int] = {
+    * writer between its two claims and is left alone. Each orphan
+    * delete re-checks "still uncommitted" under the claim lock AND the
+    * manifest lease — the two arbiters the commit claim takes — so a
+    * slot is either vacuumed before its commit (which then aborts
+    * loudly on its `_SUCCESS` guard) or committed before the re-check
+    * (which then spares it); never both. */
+  def expireVersions(s: SparkSession, path: String, keep: Int): Seq[Int] = {
     require(keep >= 1, s"keep must be >= 1 (got $keep)")
     val committed = committedVersions(s, path)
     val retired = committed.dropRight(keep)
     retired.foreach { v =>
-      Fs.delete(s, s"${manifestDir(path)}/c_$v")
-      dropCachedSlot(path, s"c_$v")
+      log.retire(s, path, v)
       Fs.delete(s, s"$path/v=$v")
     }
     val survivors = committed.drop(retired.size).toSet
@@ -435,23 +301,14 @@ object TrainingShards {
       .map(_.stripPrefix("v=").toInt)
       .filter(v => v < maxCommitted && !survivors.contains(v))
     val vacuumed = orphans.filter { v =>
-      Fs.withLease(s, s"${manifestDir(path)}/_lease") {
+      VersionLog.withLease(s, path) {
         Fs.locked {
-          if (Fs.exists(s, s"${manifestDir(path)}/c_$v")) false
+          if (Fs.exists(s, VersionLog.slot(path, v))) false
           else { Fs.delete(s, s"$path/v=$v"); true }
         }
       }
     }
-    // crashed writers' staging leftovers are snapshot-sized — vacuum
-    // what no live writer in this driver owns AND whose mtime is past
-    // the retention horizon (a refused collect of young cross-driver
-    // staging beats silently destroying an in-flight build)
-    val now = System.currentTimeMillis()
-    Fs.listDirNames(s, s"$path/_staging")
-      .map(n => s"$path/_staging/$n")
-      .filterNot(activeStaging.contains)
-      .filter(p => now - Fs.modTime(s, p) >= stagingTtlMs)
-      .foreach(Fs.delete(s, _))
+    VersionLog.vacuumStaging(s, path)
     (retired ++ vacuumed).sorted
   }
 

@@ -1,12 +1,14 @@
 package graft
 
-import graft.sink.{CowSnapshots, Fs}
+import graft.sink.{CowSnapshots, Fs, GenDir, TrainingShards, VersionLog}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The copy-on-write store's contracts below the query corpus's grain:
   * the routing kernel's key-stability (THE property that makes reuse
   * possible), merge-equals-recompute over arbitrary change sets,
-  * effect-once replay, and the age-gated orphan vacuum. */
+  * effect-once replay, and the age-gated orphan vacuum — plus the
+  * version-log contracts it shares with the full-rewrite store. */
 class CowSpec extends AnyFunSuite {
   import TestSession._
 
@@ -51,11 +53,41 @@ class CowSpec extends AnyFunSuite {
     }
   }
 
-  test("slot reuse across store incarnations never serves a stale " +
-    "manifest: wipe-and-rebuild (and expire-then-reclaim) of the same " +
-    "c_N slot invalidates any cached metadata — the cross-driver case " +
-    "the in-process remove() cannot see (cache rows are keyed on the " +
-    "slot's mtime, which a new incarnation necessarily changes)") {
+  /** The verbs both snapshot stores share — the version-log contracts
+    * below run against each. */
+  private case class Store(
+      write: (DataFrame, String, Option[String]) => Int,
+      merge: (DataFrame, String) => Int,
+      read: (String, Int) => DataFrame,
+      expire: String => Seq[Int],
+      versions: String => Seq[Int],
+      batchVersions: String => Map[String, Int])
+
+  private val cow = Store(
+    (df, root, id) => CowSnapshots.writeVersion(df, root, "doc_id", "s", 4,
+      batchId = id),
+    (ch, root) => CowSnapshots.mergeVersion(spark, root, ch, "doc_id", "s", 4),
+    (root, v) => CowSnapshots.readVersion(spark, root, Some(v)),
+    CowSnapshots.expireVersions(spark, _, keep = 1),
+    CowSnapshots.committedVersions(spark, _),
+    CowSnapshots.committedBatchVersions(spark, _))
+
+  private val fullRewrite = Store(
+    (df, root, id) => TrainingShards.writeVersion(df, root, "s", 4,
+      batchId = id),
+    (ch, root) => TrainingShards.mergeVersion(spark, root, ch, "doc_id",
+      "s", 4),
+    (root, v) => TrainingShards.readVersion(spark, root, Some(v)),
+    TrainingShards.expireVersions(spark, _, keep = 1),
+    TrainingShards.committedVersions(spark, _),
+    TrainingShards.committedBatchVersions(spark, _))
+
+  /** Move `path`'s mtime back past the vacuum's age horizon. */
+  private def ageOut(path: String): Unit =
+    assert(new java.io.File(path).setLastModified(
+      System.currentTimeMillis() - VersionLog.OrphanTtlMs - 60000L))
+
+  private def staleIncarnation(store: Store): Unit = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val o = Tables.t(spark, sfDir, "orders")
@@ -63,36 +95,81 @@ class CowSpec extends AnyFunSuite {
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
     val root = java.nio.file.Files
       .createTempDirectory("graft_cow_stale").toString
-    val v1 = CowSnapshots.writeVersion(o, root, "doc_id", "s", 4)
+    val v1 = store.write(o, root, Some("old"))
     // populate the cache through a real read
-    val n1 = CowSnapshots.readVersion(spark, root, Some(v1)).count()
+    val n1 = store.read(root, v1).count()
     // ANOTHER DRIVER wipes and rebuilds the same root with different
     // data — simulated by going around this JVM's invalidation hooks:
-    // raw filesystem deletes, then a rebuild that lands on the SAME
-    // slot number c_1
+    // the rebuild is built under a sibling root, then renamed over the
+    // wiped root with raw filesystem calls, so it lands on the SAME
+    // slot number c_1 without this JVM's commit ever seeing that slot
     Fs.delete(spark, root)
     Thread.sleep(50) // mtime granularity headroom
     val half = o.filter($"doc_id" % 2 === 0)
-    val v1b = CowSnapshots.writeVersion(half, root, "doc_id", "s", 4)
+    val other = s"${root}_other"
+    val v1b = store.write(half, other, Some("new"))
+    java.nio.file.Files.move(java.nio.file.Paths.get(other),
+      java.nio.file.Paths.get(root))
     assert(v1b == v1, "rebuild must land on the reused slot number")
-    val n2 = CowSnapshots.readVersion(spark, root, Some(v1b)).count()
+    val n2 = store.read(root, v1b).count()
     assert(n2 == half.count() && n2 != n1,
       s"stale cache: reused slot c_$v1 served the OLD incarnation's " +
         s"manifest ($n1 rows) instead of the new one's ($n2 expected)")
+    assert(store.batchVersions(root) == Map("new" -> v1b),
+      "the wiped incarnation's batch id must not resolve")
     // expire-then-reclaim inside one incarnation stays fresh too
     val mx = o.agg(max($"doc_id")).head().getLong(0)
     val tiny = CdcFixture.toMerge(CdcFixture.tinyBatch(
       o.withColumn("prio", lit("x")), mx))
-    val v2 = CowSnapshots.mergeVersion(spark, root, tiny,
-      "doc_id", "s", 4)
-    CowSnapshots.expireVersions(spark, root, keep = 1, orphanTtlMs = 0L)
-    assert(CowSnapshots.committedVersions(spark, root) == Seq(v2))
-    val nAfter = CowSnapshots.readVersion(spark, root, Some(v2)).count()
+    val v2 = store.merge(tiny, root)
+    store.expire(root)
+    assert(store.versions(root) == Seq(v2))
+    val nAfter = store.read(root, v2).count()
     // the store holds the EVEN half: the tiny batch's 2 update keys
     // (%10==5, odd) match nothing and land as new rows, its delete key
     // (%10==6, even) removes one, the 3 inserts add
     assert(nAfter == n2 + 2 - 1 + CdcFixture.nInserts,
       "post-expire read through the cache must stay exact")
+  }
+
+  test("slot reuse across store incarnations never serves a stale " +
+    "manifest: wipe-and-rebuild (and expire-then-reclaim) of the same " +
+    "c_N slot invalidates any cached metadata — the cross-driver case " +
+    "the in-process remove() cannot see (cache rows are keyed on the " +
+    "slot's mtime, which a new incarnation necessarily changes)") {
+    staleIncarnation(cow)
+  }
+
+  test("slot reuse across store incarnations never serves a stale " +
+    "manifest: the full-rewrite store (TrainingShards)") {
+    staleIncarnation(fullRewrite)
+  }
+
+  test("age-gated staging vacuum: TrainingShards expire, CowSnapshots " +
+    "expire and GenDir.publish spare a fresh _staging entry and collect " +
+    "one past the TTL") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val o = Tables.t(spark, sfDir, "orders")
+      .select($"o_orderkey".as("doc_id"),
+        expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
+    val cases: Seq[(String, String => Unit)] = Seq(
+      "TrainingShards.expireVersions" -> { root =>
+        fullRewrite.write(o, root, None); fullRewrite.expire(root): Unit },
+      "CowSnapshots.expireVersions" -> { root =>
+        cow.write(o, root, None); cow.expire(root): Unit },
+      "GenDir.publish" -> (GenDir.publish(spark, _, o)))
+    cases.foreach { case (verb, run) =>
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_vacuum").toString
+      Fs.touch(spark, s"$root/_staging/fresh/leftover")
+      Fs.touch(spark, s"$root/_staging/aged/leftover")
+      ageOut(s"$root/_staging/aged")
+      run(root)
+      assert(Fs.listDirNames(spark, s"$root/_staging") == Seq("fresh"),
+        s"$verb: a young staging entry is spared (it may be a live " +
+          "writer's build), an aged one is collected")
+    }
   }
 
   test("lost update aborted: a merge that planned against a parent " +
@@ -343,11 +420,11 @@ class CowSpec extends AnyFunSuite {
     // a crashed writer's never-referenced group: spared while young,
     // collected once past the ttl
     Fs.touch(spark, s"$root/files/deadtok/shard=0/part-junk.parquet")
-    CowSnapshots.expireVersions(spark, root, keep = 2,
-      orphanTtlMs = 3600000L)
+    CowSnapshots.expireVersions(spark, root, keep = 2)
     assert(Fs.exists(spark, s"$root/files/deadtok"),
       "a young unreferenced group may be an in-flight commit — spared")
-    CowSnapshots.expireVersions(spark, root, keep = 2, orphanTtlMs = 0L)
+    ageOut(s"$root/files/deadtok")
+    CowSnapshots.expireVersions(spark, root, keep = 2)
     assert(!Fs.exists(spark, s"$root/files/deadtok"),
       "an aged-out unreferenced group is vacuumed")
     assert(fp(v1) == f1 && fp(v2) == f2,
