@@ -199,8 +199,8 @@ object StreamingOps extends QueryModule {
       // Trigger.AvailableNow: plan every pending batch up front, then
       // self-terminate — same batch boundaries as the old
       // processAllAvailable drain (read limits are honored per batch),
-      // ~0.1 s less stop/poll latency per drained query (measured in
-      // tools/DrainBench; x the whole streaming family per bench run)
+      // ~0.1 s less stop/poll latency per drained query (one-JVM A/B of
+      // the two drain forms; x the whole streaming family per bench run)
       try streamed.writeStream.outputMode(mode).format("memory")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", ckpt).queryName(name).start()

@@ -132,31 +132,16 @@ object Stress {
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     println("generated")
 
-    // Shuffle-write bytes across all tasks — evidence for the candidate-
-    // stage slimming (id-pair-only distinct): reset per timed block.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    // Shuffle-write bytes of each timed block are evidence for the
+    // candidate-stage slimming (id-pair-only distinct). A drain timeout
+    // must not abort the run: the measurement is already in hand, only the
+    // shuffle counter may be short.
     def time(label: String)(f: => Any): Unit = {
-      shuffleBytes.set(0L)
-      val t0 = System.nanoTime(); val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      // Drain the async listener bus deterministically before reading the
-      // counter — a fixed sleep undercounts when TaskEnd events lag under
-      // load, and these MiB numbers are cited as optimization evidence.
-      // A drain timeout must not abort the run: the measurement is already
-      // in hand, only the shuffle counter may be stale.
-      try org.apache.spark.sql.graft.ColumnBridgeImpl.drainListenerBus(
-        s.sparkContext, 30000L)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          System.err.println(s"STRESS $label: listener bus drain timed out;" +
-            " shuffle MiB may undercount")
-      }
-      println(f"STRESS $label%-28s $secs%8.2f s  shuffle ${shuffleBytes.get / 1048576.0}%9.1f MiB  ($r)")
+      val r = Profile.record(s)(f)
+      if (r.drainTimedOut)
+        System.err.println(s"STRESS $label: listener bus drain timed out;" +
+          " shuffle MiB may undercount")
+      println(f"STRESS $label%-28s ${r.wallMs / 1000}%8.2f s  shuffle ${r.shuffleWriteBytes / 1048576.0}%9.1f MiB  (${r.result})")
     }
     // heavy operators at 10x
     time(s"q01 agg ${6 * mult}M rows") {
