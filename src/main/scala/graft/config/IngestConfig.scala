@@ -49,7 +49,9 @@ final case class DatabasesConfig(
       * read and the writer goroutine count is #db×#table): applied in
       * Fanout.writeBatch as the partition cap during per-target appends,
       * i.e. the bound on concurrent writer tasks / JDBC connections per
-      * append. */
+      * append. The appends to all targets run at once, so a batch has at
+      * most #targets × write_workers writer tasks in flight — the
+      * reference's #db×#table workers, each up to write_workers wide. */
     writeWorkers: Int = 5)
 
 /** plugin_spec: section (config.go:24-27). */

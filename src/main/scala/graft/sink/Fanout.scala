@@ -10,10 +10,11 @@ import org.slf4j.LoggerFactory
   * goroutines with racy channel teardown (main.go:149-155, SURVEY §1.3-4)
   * and row-at-a-time INSERTs inside a broken per-record-commit tx
   * (main.go:181-210, §1.3-3). Spark-first replacement: persist the batch
-  * once, then write it per target — deterministic order, batched appends,
-  * per-partition parallelism inside each write. Delivery is at-least-once
-  * per micro-batch (same guarantee class as the reference, better
-  * granularity).
+  * once, then write it to every target at once — one writer thread per
+  * target, all joined before the batch (poll tick / micro-batch) ends —
+  * with batched appends and per-partition parallelism inside each write.
+  * Delivery is at-least-once per micro-batch (same guarantee class as the
+  * reference, better granularity).
   */
 trait AppendSink {
   /** Append a batch to `db`.`table`; errors must not kill the stream. */
@@ -286,8 +287,24 @@ object Fanout {
 
   /** Write one batch to every target. Persist once so the (possibly
     * expensive) upstream plan runs a single time, not once per target;
+    * then append to all targets concurrently, one writer thread per
+    * target (the reference's per-table goroutines, main.go:149-155);
     * warn-and-continue per target (the reference's error policy,
     * main.go:198-203).
+    *
+    * A poll tick is one JSON document, so its batch is one partition and
+    * each append is a one-task job: run in turn, the appends would leave
+    * all task slots but one idle. The writers are started on the calling
+    * thread for this call only, so they inherit its Spark local
+    * properties — inside `foreachBatch` the streaming query's job group,
+    * which `StreamingQuery.stop` cancels. Returns only after every
+    * started append has returned, also on failure or interrupt (the
+    * interrupt status is restored, not passed on to the writers), so the
+    * cached batch is never released under a reader, a replayed batch
+    * never overlaps a writer of the failed attempt, and per-target order
+    * across batches is the call order. An append's `Exception` is
+    * logged and counts as a failed target; any other `Throwable` is
+    * rethrown once all appends have returned.
     *
     * @param batchId unique id of this batch (poll tick / micro-batch id),
     *                forwarded per append call
@@ -295,10 +312,13 @@ object Fanout {
     *                per-target appends — the config's `write_workers` knob
     *                (databases.write_workers), honored here as the bound on
     *                concurrent writer tasks (= JDBC connections) PER
-    *                append, which is what the reference's per-(db,table)
-    *                writer goroutines amount to (db_manager.go). <=0 or
-    *                None leaves the upstream partitioning alone. Coalesce,
-    *                not repartition: narrows without a shuffle.
+    *                append; with every target written at once that is at
+    *                most targets × write_workers writer tasks, the
+    *                reference's #db×#table writer goroutines
+    *                (db_manager.go). Spark's task slots cap what actually
+    *                runs. <=0 or None leaves the upstream partitioning
+    *                alone. Coalesce, not repartition: narrows without a
+    *                shuffle.
     * @return (targets written successfully, rows in the batch) — the row
     *         count rides along so callers don't re-execute the plan */
   def writeBatch(df: DataFrame, targets: Seq[(String, String)],
@@ -314,15 +334,49 @@ object Fanout {
         case Some(w) => cached.coalesce(w)
         case None => cached
       }
-      val ok = targets.count { case (db, table) =>
-        try { sink.append(bounded, db, table, batchId); true }
-        catch {
-          case e: Exception =>
-            log.warn(s"fanout: append to $db.$table failed: ${e.getMessage}")
-            false
-        }
+      (appendAll(bounded, targets, sink, batchId), rows)
+    } finally {
+      // unpersist waits on the block manager master, so an interrupted
+      // caller would skip the release: clear the status, then restore it
+      val interrupted = Thread.interrupted()
+      try { cached.unpersist(); () }
+      finally if (interrupted) Thread.currentThread().interrupt()
+    }
+  }
+
+  /** One thread per target, started here and joined before returning;
+    * the number of targets whose append returned normally. */
+  private def appendAll(df: DataFrame, targets: Seq[(String, String)],
+      sink: AppendSink, batchId: Long): Int = {
+    val failures = new Array[Throwable](targets.size) // null: written
+    val writers = scala.collection.mutable.ArrayBuffer.empty[Thread]
+    try {
+      targets.zipWithIndex.foreach { case ((db, table), i) =>
+        val w = new Thread(() =>
+          try sink.append(df, db, table, batchId)
+          catch { case t: Throwable => failures(i) = t },
+          s"fanout-$batchId-$db.$table")
+        w.start()
+        writers += w
       }
-      (ok, rows)
-    } finally { cached.unpersist(); () }
+    } finally {
+      var interrupted = false
+      writers.foreach { w =>
+        while (w.isAlive)
+          try w.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    val ok = targets.zip(failures).count {
+      case (_, null) => true
+      case ((db, table), e: Exception) =>
+        log.warn(s"fanout: append to $db.$table failed: ${e.getMessage}")
+        false
+      case _ => false
+    }
+    failures.filter(f => f != null && !f.isInstanceOf[Exception]).toList match {
+      case fatal :: more => more.foreach(fatal.addSuppressed); throw fatal
+      case Nil => ok
+    }
   }
 }

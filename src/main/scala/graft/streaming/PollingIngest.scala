@@ -46,6 +46,9 @@ object PollingIngest {
     private[PollingIngest] val stopFlag = new AtomicBoolean(false)
     @volatile var ticks: Int = 0
     @volatile var rowsIngested: Long = 0L
+    /** Target appends that failed, summed over ticks (targets − written
+      * per tick): a partial fan-out is warn-and-continue, never silent. */
+    @volatile var failedAppends: Long = 0L
     /** Run-unique base for batch ids: ticks restart at 0 every run, and
       * an idempotent sink keyed by bare tick numbers would sweep a
       * PREVIOUS run's rows (each poll tick carries different live data —
@@ -147,7 +150,10 @@ object PollingIngest {
           writeWorkers = Some(cfg.databases.writeWorkers))
         handle.ticks += 1
         handle.rowsIngested += rows
-        log.info(s"tick ${handle.ticks}: fanned out to $written/${targets.size} targets")
+        handle.failedAppends += targets.size - written
+        if (written < targets.size)
+          log.warn(s"tick ${handle.ticks}: fanned out to only $written/${targets.size} targets")
+        else log.info(s"tick ${handle.ticks}: fanned out to $written/${targets.size} targets")
         if (!(maxTicks > 0 && handle.ticks >= maxTicks))
           sleepFn(cfg.plugin.intervalSec * 1000L)
       } catch {

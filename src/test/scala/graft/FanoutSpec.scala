@@ -1,0 +1,111 @@
+package graft
+
+import graft.sink.{AppendSink, Fanout}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import scala.jdk.CollectionConverters._
+
+/** Fanout.writeBatch's concurrency contract: every target's append runs at
+  * once on a writer started by the call, sees the caller's Spark local
+  * properties, and has returned before writeBatch does — on failure and on
+  * interrupt too. */
+class FanoutSpec extends AnyFunSuite {
+  import TestSession._
+
+  private val targets = (1 to 4).map(i => (s"db$i", "t"))
+  private def batch: DataFrame = spark.range(0, 10, 1, numPartitions = 1).toDF("v")
+
+  /** Sink whose every append runs `body(db)`. */
+  private def sinkOf(body: String => Unit): AppendSink = new AppendSink {
+    override def append(df: DataFrame, db: String, table: String): Unit = body(db)
+  }
+
+  test("appends to all targets overlap: each waits for every other to start") {
+    // one shared 30 s deadline: appends run in turn fail after 30 s, not hang
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    val started = new CountDownLatch(targets.size)
+    val sink = sinkOf { db =>
+      started.countDown()
+      if (!started.await(deadline - System.nanoTime(), TimeUnit.NANOSECONDS))
+        throw new IllegalStateException(s"append to $db never overlapped the others")
+    }
+    val (ok, rows) = Fanout.writeBatch(batch, targets, sink)
+    assert(ok === targets.size)
+    assert(rows === 10L)
+  }
+
+  test("every append sees the calling thread's local properties, per call") {
+    val key = "graft.fanout.spec"
+    def seenFrom(value: String): Seq[String] = {
+      val seen = new ConcurrentLinkedQueue[String]
+      val sink = sinkOf { _ =>
+        seen.add(String.valueOf(spark.sparkContext.getLocalProperty(key))); ()
+      }
+      spark.sparkContext.setLocalProperty(key, value)
+      try Fanout.writeBatch(batch, targets, sink)
+      finally spark.sparkContext.setLocalProperty(key, null)
+      seen.asScala.toSeq
+    }
+    assert(seenFrom("a") === Seq.fill(targets.size)("a"))
+    var other: Seq[String] = Nil
+    val t = new Thread(() => other = seenFrom("b"))
+    t.start(); t.join()
+    assert(other === Seq.fill(targets.size)("b"))
+  }
+
+  /** One target fails at once, the others set a flag after 300 ms; with
+    * `interrupt` the caller is interrupted once all of them have started. */
+  private def barrierCase(interrupt: Boolean): Unit = {
+    val flags = targets.map(_ => new AtomicBoolean(false))
+    val started = new CountDownLatch(targets.size)
+    val sink = sinkOf { db =>
+      started.countDown()
+      if (db == targets.head._1) throw new RuntimeException("boom")
+      Thread.sleep(300)
+      flags(targets.indexWhere(_._1 == db)).set(true)
+    }
+    var ok = -1
+    var flagsAtReturn: Seq[Boolean] = Nil
+    var interruptedAtReturn = false
+    val caller = new Thread(() => {
+      ok = Fanout.writeBatch(batch, targets, sink)._1
+      flagsAtReturn = flags.tail.map(_.get)
+      interruptedAtReturn = Thread.currentThread().isInterrupted
+    })
+    caller.start()
+    if (interrupt) {
+      assert(started.await(30, TimeUnit.SECONDS))
+      caller.interrupt()
+    }
+    caller.join(60000)
+    assert(!caller.isAlive)
+    assert(flagsAtReturn === Seq.fill(targets.size - 1)(true))
+    assert(ok === targets.size - 1)
+    assert(interruptedAtReturn === interrupt) // interrupt status kept, not swallowed
+  }
+
+  test("writeBatch returns only after every append has returned") {
+    barrierCase(interrupt = false)
+  }
+
+  test("an interrupted caller still waits for every append") {
+    barrierCase(interrupt = true)
+  }
+
+  test("an Error from one append is rethrown after the others, batch released") {
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val finished = new AtomicInteger(0)
+    val sink = sinkOf { db =>
+      if (db == targets.head._1) throw new AssertionError("fatal append")
+      Thread.sleep(300)
+      finished.incrementAndGet(); ()
+    }
+    val e = intercept[AssertionError](Fanout.writeBatch(batch, targets, sink))
+    assert(e.getMessage === "fatal append")
+    assert(finished.get === targets.size - 1)
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
+}

@@ -81,36 +81,47 @@ class IngestSpec extends AnyFunSuite {
   test("fan-out: failing target is skipped with warn-and-continue") {
     val root = java.nio.file.Files.createTempDirectory("graft_ingest_err").toString
     val inner = new ParquetSink(root)
-    val flaky = new AppendSink {
+    def failingOn(bad: String) = new AppendSink {
       override def append(df: DataFrame, db: String, table: String): Unit = {
-        if (db == "bad") throw new RuntimeException("boom")
+        if (db == bad) throw new RuntimeException("boom")
         inner.append(df, db, table)
       }
     }
     val df = OpenSky.parseJson(spark, Seq(OpenSky.sampleResponse(10))).toDF()
-    val (ok, rows) = Fanout.writeBatch(df, Seq(("good", "t1"), ("bad", "t1"), ("good", "t2")), flaky)
+    val (ok, rows) = Fanout.writeBatch(df, Seq(("good", "t1"), ("bad", "t1"), ("good", "t2")),
+      failingOn("bad"))
     assert(ok === 2)
     assert(rows === 10)
     assert(spark.read.parquet(s"$root/good/t1").count() === 10)
+    // driven through the loop, every tick's failed append is counted
+    val cfg = IngestConfig(
+      databases = DatabasesConfig(prefix = "db", copies = 2, extra = Map("x" -> 2)),
+      runForSec = 0)
+    val h = PollingIngest.run(spark, new SyntheticOpenSkySource(5), cfg, failingOn("db2"),
+      maxTicks = 3, sleepFn = _ => ())
+    assert(h.ticks === 3)
+    assert(h.failedAppends === 3L) // 1 of 4 targets, 3 ticks
+    assert(spark.read.parquet(s"$root/db1/flights").count() === 15)
   }
 
   test("fan-out: write_workers caps writer tasks per append (config honored)") {
-    import spark.implicits._
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    // appends run on one thread per target: collect concurrently, compare sorted
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    def sorted = { import scala.jdk.CollectionConverters._; seen.asScala.toSeq.sorted }
     val probe = new AppendSink {
       override def append(df: DataFrame, db: String, table: String): Unit = {
-        seen += df.rdd.getNumPartitions; ()
+        seen.add(df.rdd.getNumPartitions); ()
       }
     }
     val wide = spark.range(0, 1000, 1, numPartitions = 16).toDF("v")
     Fanout.writeBatch(wide, Seq(("db1", "t"), ("db2", "t")), probe,
       writeWorkers = Some(2))
-    assert(seen.toSeq === Seq(2, 2), s"got $seen")
+    assert(sorted === Seq(2, 2), s"got $seen")
     // cap above the input's partition count is a no-op, never widens
     seen.clear()
     Fanout.writeBatch(spark.range(0, 10, 1, numPartitions = 3).toDF("v"),
       Seq(("db1", "t")), probe, writeWorkers = Some(64))
-    assert(seen.toSeq === Seq(3), s"got $seen")
+    assert(sorted === Seq(3), s"got $seen")
   }
 
   test("ingest loop: fetch errors back off and the loop survives") {
