@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.slf4j.LoggerFactory
 
 /** Append sink abstraction + multi-target fan-out (SURVEY §2A rows A5,
@@ -45,13 +45,85 @@ final class ParquetSink(root: String) extends AppendSink {
   * append() parameter, so a single sink instance serving two concurrent
   * queries can never interleave ids across batches.
   * Readers just scan `<root>/<db>/<table>` (hive partition discovery).
+  *
+  * Encode once per fan-out: [[Fanout.writeBatch]] hands every target the
+  * same frame object, so only the first append of a (frame, batch id)
+  * runs the parquet write. Every other append of that frame and id waits
+  * for it and copies its files (data and `_SUCCESS`) into a `_`-prefixed
+  * temp dir under its own table — hidden from partition discovery — then
+  * renames that in as its `batch=<id>`. The copy goes through the driver;
+  * it is the encoded batch, about 0.3× the poll body the driver already
+  * holds. Failure stays per target: if the first append fails, or a copy
+  * cannot be made, that append encodes its own target as before; an
+  * append that finds the encoded dir gone encodes anew for the others.
+  * Only the last key is remembered, and its frame only weakly, so the
+  * batch's plan is never pinned.
   */
 final class IdempotentParquetSink(root: String) extends AppendSink {
+  import IdempotentParquetSink.Encoding
+
+  private var last: Encoding = _ // guarded by this
+
   override def append(df: DataFrame, db: String, table: String): Unit =
     append(df, db, table, 0L)
-  override def append(df: DataFrame, db: String, table: String, batchId: Long): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/$db/$table/batch=$batchId")
+  override def append(df: DataFrame, db: String, table: String, batchId: Long): Unit = {
+    val dir = s"$root/$db/$table/batch=$batchId"
+    val (enc, first) = synchronized {
+      if (last != null && last.of(df, batchId) && !last.lost(df.sparkSession)) (last, false)
+      else { last = new Encoding(df, batchId, dir); (last, true) }
+    }
+    if (first) {
+      var ok = false
+      try { write(df, dir); ok = true } finally enc.written.complete(ok)
+    } else if (!enc.written.join()) write(df, dir)
+    else if (enc.dir != dir) // else the same target again, which holds it
+      try copyIn(df.sparkSession, enc.dir, dir)
+      catch {
+        case e: java.io.IOException =>
+          IdempotentParquetSink.log.warn(
+            s"copy of ${enc.dir} to $dir failed (${e.getMessage}); encoding it")
+          write(df, dir)
+      }
+  }
+
+  private def write(df: DataFrame, dir: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
+
+  /** Copy `src` into a temp dir beside `dir`, then swap it in as `dir`
+    * by rename, as Spark's overwrite would leave it. */
+  private def copyIn(spark: SparkSession, src: String, dir: String): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val from = new Path(src)
+    val fs = from.getFileSystem(conf)
+    val tmp = new Path(new Path(dir).getParent, s"_copy-${java.util.UUID.randomUUID()}")
+    try {
+      // `_SUCCESS` is written last, so a copy that holds it is whole
+      if (!FileUtil.copy(fs, from, fs, tmp, false, conf) ||
+          !fs.exists(new Path(tmp, "_SUCCESS")))
+        throw new java.io.IOException(s"copy $src -> $tmp failed")
+      Fs.delete(spark, dir)
+      // lost only to a concurrent append of this same frame and id to
+      // this same target: the batch it landed is the one copied here
+      Fs.claim(spark, tmp.toString, dir): Unit
+    } finally fs.delete(tmp, true): Unit
+    spark.catalog.refreshByPath(dir)
+  }
+}
+
+object IdempotentParquetSink {
+  private val log = LoggerFactory.getLogger(getClass)
+
+  /** One append's parquet write of `frame` (held weakly) for `batchId`
+    * into `dir`; `written` completes with whether it succeeded. */
+  private final class Encoding(frame: DataFrame, batchId: Long, val dir: String) {
+    private val ref = new java.lang.ref.WeakReference(frame)
+    val written = new java.util.concurrent.CompletableFuture[Boolean]
+    def of(df: DataFrame, id: Long): Boolean = id == batchId && (ref.get eq df)
+    /** Written, but its batch dir has since lost its `_SUCCESS`. */
+    def lost(spark: SparkSession): Boolean =
+      written.getNow(false) && !Fs.exists(spark, s"$dir/_SUCCESS")
+  }
 }
 
 /** JDBC append sink (A8): Spark's JDBC writer does batched INSERTs with
@@ -305,6 +377,11 @@ object Fanout {
     * across batches is the call order. An append's `Exception` is
     * logged and counts as a failed target; any other `Throwable` is
     * rethrown once all appends have returned.
+    *
+    * Every target's append gets the same frame object, so a sink can
+    * tell the appends of one batch apart from a new batch by identity:
+    * [[IdempotentParquetSink]] encodes the batch's parquet once and copies
+    * the files to the other targets.
     *
     * @param batchId unique id of this batch (poll tick / micro-batch id),
     *                forwarded per append call

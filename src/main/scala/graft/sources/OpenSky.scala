@@ -105,10 +105,16 @@ object OpenSky {
     // refuses to duplicate the expensive from_json (SPARK-36718), whereas
     // writing from_json(...).getField twice yields two schema-pruned
     // JsonToStructs that subexpression elimination can never merge.
+    // The explode is an OUTER one whose empty-array row is dropped by its
+    // position: for a plain explode, InferFiltersFromGenerate adds
+    // `size(states) > 0 AND isnotnull(states)`, pushed below the projection
+    // as two more from_json(value) per document on an RDD-backed input
+    // (a LocalRelation folds the parse into a constant; PlanSpec asserts).
     val env = raw.toDF("value")
       .select(from_json($"value", envelopeSchema).as("r"))
       .select($"r.time".as("snapshot_time"), $"r.states".as("states"))
-    val parsed = env.select($"snapshot_time", explode($"states").as("state"))
+    val parsed = env.select($"snapshot_time", posexplode_outer($"states").as(Seq("pos", "state")))
+      .where($"pos".isNotNull)
     val cols = col("snapshot_time").as("time") +:
       stateColumns.zipWithIndex.map { case ((name, dt), i) =>
         val v = element_at(col("state"), i + 1)

@@ -39,6 +39,21 @@ class IngestSpec extends AnyFunSuite {
     assert(b.on_ground === Some(true))
   }
 
+  test("parse: an RDD-backed batch gives the local batch's rows, empty states dropped") {
+    import spark.implicits._
+    val docs = Seq(OpenSky.sampleResponse(7, 1700000001L),
+      """{"time": 1700000002, "states": []}""",
+      """{"time": 1700000003, "states": null}""",
+      """{"time": 1700000004}""",
+      OpenSky.sampleResponse(3, 1700000005L))
+    val local = OpenSky.parseJson(spark, docs).toDF()
+    val rdd = OpenSky.parseBatch(spark, spark.sparkContext.parallelize(docs, 2).toDS()).toDF()
+    assert(local.count() === 10L)
+    assert(local.exceptAll(rdd).isEmpty && rdd.exceptAll(local).isEmpty)
+    assert(rdd.select("time").distinct().as[Long].collect().sorted.toSeq ===
+      Seq(1700000001L, 1700000005L))
+  }
+
   test("topology expansion matches reference semantics (3 copies + extra)") {
     val cfg = IngestConfig(databases =
       DatabasesConfig(prefix = "auto_", copies = 3, extra = Map("foo" -> 5)))

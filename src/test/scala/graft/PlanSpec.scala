@@ -38,23 +38,41 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ingest parse: the explode carries only envelope scalars per state row") {
+    import graft.sources.OpenSky
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
     import org.apache.spark.sql.execution.GenerateExec
-    // regression guard for the 60GB-row-copy bug: if the envelope scalar
-    // is projected above the generate, Catalyst pulls the raw multi-MB
-    // response string into requiredChildOutput — duplicated into every
-    // exploded state row
-    val df = graft.sources.OpenSky
-      .parseJson(spark, Seq(graft.sources.OpenSky.sampleResponse(5))).toDF()
-    val gens = df.queryExecution.executedPlan.collect { case g: GenerateExec => g }
-    assert(gens.nonEmpty, "expected a GenerateExec in the parse plan")
-    gens.foreach { g =>
-      assert(!g.requiredChildOutput.exists(_.name == "value"),
-        s"raw JSON string rides every exploded row: ${g.requiredChildOutput}")
-      assert(g.requiredChildOutput.forall { a =>
-        import org.apache.spark.sql.types._
-        !a.dataType.isInstanceOf[ArrayType] &&
-          !a.dataType.isInstanceOf[StructType] && a.dataType != StringType
-      }, s"wide column carried through the explode: ${g.requiredChildOutput}")
+    import spark.implicits._
+    val docs = Seq(OpenSky.sampleResponse(5))
+    // PollingIngest parses a LocalRelation, where ConvertToLocalRelation
+    // folds from_json into a driver-side constant; the stream source and
+    // DSv2 hand it an RDD-backed frame, which keeps every parse in the plan
+    Seq("local" -> OpenSky.parseJson(spark, docs).toDF(),
+      "rdd" -> OpenSky.parseBatch(spark, spark.sparkContext.parallelize(docs).toDS()).toDF()
+    ).foreach { case (input, df) =>
+      // regression guard for the 60GB-row-copy bug: if the envelope scalar
+      // is projected above the generate, Catalyst pulls the raw multi-MB
+      // response string into requiredChildOutput — duplicated into every
+      // exploded state row
+      val gens = df.queryExecution.executedPlan.collect { case g: GenerateExec => g }
+      assert(gens.nonEmpty, s"$input: expected a GenerateExec in the parse plan")
+      gens.foreach { g =>
+        assert(!g.requiredChildOutput.exists(_.name == "value"),
+          s"$input: raw JSON string rides every exploded row: ${g.requiredChildOutput}")
+        assert(g.requiredChildOutput.forall { a =>
+          import org.apache.spark.sql.types._
+          !a.dataType.isInstanceOf[ArrayType] &&
+            !a.dataType.isInstanceOf[StructType] && a.dataType != StringType
+        }, s"$input: wide column carried through the explode: ${g.requiredChildOutput}")
+      }
+      if (input == "rdd") {
+        // each document is decoded once: an inferred filter on the
+        // exploded array must not re-derive it from a second from_json
+        val plan = df.queryExecution.optimizedPlan
+        val parses = plan.flatMap(_.expressions.flatMap(_.collect {
+          case j: JsonToStructs if j.child.references.exists(_.name == "value") => j
+        }))
+        assert(parses.size === 1, s"$input: ${parses.size} from_json(value) in\n$plan")
+      }
     }
   }
 

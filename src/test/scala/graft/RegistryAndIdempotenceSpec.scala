@@ -1,9 +1,15 @@
 package graft
 
-import graft.sink.{Fanout, IdempotentParquetSink}
+import graft.sink.{AppendSink, Fanout, IdempotentParquetSink}
 import graft.sources.{OpenSky, OpenSkyHttpSource, SourceRegistry}
 import graft.streaming.SyntheticOpenSkySource
+import graft.tools.Profile
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.CountDownLatch
 
 /** A14 registry contract + effectively-once batch replay. */
 class RegistryAndIdempotenceSpec extends AnyFunSuite {
@@ -42,5 +48,90 @@ class RegistryAndIdempotenceSpec extends AnyFunSuite {
     // a new batch id appends
     Fanout.writeBatch(df, targets, sink, batchId = 1)
     assert(spark.read.parquet(s"$root/db1/flights").count() === 20)
+  }
+
+  /** The reference's 8-target fan-out (3 database copies plus `foo`). */
+  private val eight = (1 to 3).map(i => (s"db$i", "flights")) ++
+    (1 to 5).map(j => ("foo", s"flights_$j"))
+  private def tick(states: Int, time: Long): DataFrame =
+    OpenSky.parseJson(spark, Seq(OpenSky.sampleResponse(states, time))).toDF()
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+  private def batchOf(root: String, target: (String, String), id: Long): Seq[String] =
+    rowsOf(spark.read.parquet(s"$root/${target._1}/${target._2}/batch=$id"))
+  /** `_`-prefixed entries left in the targets' table dirs. */
+  private def leftovers(root: String, targets: Seq[(String, String)]): Seq[String] =
+    targets.distinct.flatMap { case (db, t) =>
+      Option(new File(s"$root/$db/$t").list()).toSeq.flatten.filter(_.startsWith("_"))
+    }
+
+  test("encode once: 8 targets hold equal rows from 1 parquet write job") {
+    val root = Files.createTempDirectory("graft_once").toString
+    val sink = new IdempotentParquetSink(root)
+    val df = tick(50, 1700000000L)
+    val expected = rowsOf(df)
+    val rec = Profile.record(spark)(Fanout.writeBatch(df, eight, sink, batchId = 7))
+    assert(rec.result === ((8, 50L)))
+    val writes = rec.jobs.map(_.callSite).filter(_.startsWith("parquet at"))
+    assert(writes.size === 1, s"jobs: ${rec.jobs.map(_.callSite)}")
+    eight.foreach { t =>
+      assert(batchOf(root, t, 7) === expected, s"$t")
+      assert(new File(s"$root/${t._1}/${t._2}/batch=7/_SUCCESS").isFile, s"$t")
+    }
+    assert(leftovers(root, eight).isEmpty)
+    // a replay of the id with a new frame re-encodes: every target,
+    // the ones that were copied to included, holds the new batch
+    val replay = tick(5, 1700000999L)
+    assert(Fanout.writeBatch(replay, eight, sink, batchId = 7) === ((8, 5L)))
+    eight.foreach(t => assert(batchOf(root, t, 7) === rowsOf(replay), s"$t"))
+    assert(leftovers(root, eight).isEmpty)
+  }
+
+  test("encode once: a target listed twice, or re-sent its removed batch, holds it") {
+    val root = Files.createTempDirectory("graft_twice").toString
+    val sink = new IdempotentParquetSink(root)
+    val targets = Seq(("a", "t"), ("b", "t"), ("a", "t"), ("b", "t"))
+    val frames = (1L to 3L).map { id =>
+      val df = tick(10, 1700000000L + id)
+      assert(Fanout.writeBatch(df, targets, sink, batchId = id) === ((4, 10L)))
+      targets.foreach(t => assert(batchOf(root, t, id) === rowsOf(df), s"$t batch $id"))
+      df
+    }
+    // the same frame and id again, after its batch dirs were removed:
+    // neither a copy nor a skip may leave a target without its batch
+    targets.distinct.foreach { case (db, t) =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(s"$root/$db/$t/batch=3"))
+    }
+    assert(Fanout.writeBatch(frames.last, targets, sink, batchId = 3) === ((4, 10L)))
+    targets.foreach(t => assert(batchOf(root, t, 3) === rowsOf(frames.last), s"$t"))
+    assert(leftovers(root, targets).isEmpty)
+  }
+
+  /** `inner`, except that every target but `lead` appends only once the
+    * append to `lead` has returned: `lead` is the one that encodes. */
+  private def leading(inner: AppendSink, lead: (String, String)): AppendSink = new AppendSink {
+    private val led = new CountDownLatch(1)
+    override def append(df: DataFrame, db: String, table: String): Unit =
+      append(df, db, table, 0L)
+    override def append(df: DataFrame, db: String, table: String, batchId: Long): Unit =
+      if ((db, table) == lead)
+        try inner.append(df, db, table, batchId) finally led.countDown()
+      else { led.await(); inner.append(df, db, table, batchId) }
+  }
+
+  test("encode once: a target that cannot be written fails alone, whichever encodes") {
+    val bad = eight(1)
+    Seq(None, Some(bad), Some(eight.head)).foreach { lead =>
+      val root = Files.createTempDirectory("graft_bad").toString
+      Files.createDirectories(new File(s"$root/${bad._1}").toPath)
+      Files.write(new File(s"$root/${bad._1}/${bad._2}").toPath, Array[Byte](1))
+      val sink = new IdempotentParquetSink(root)
+      val df = tick(20, 1700000000L)
+      val (ok, rows) = Fanout.writeBatch(df, eight, lead.fold[AppendSink](sink)(leading(sink, _)),
+        batchId = 3)
+      assert((ok, rows) === ((7, 20L)), s"lead $lead")
+      val good = eight.filter(_ != bad)
+      good.foreach(t => assert(batchOf(root, t, 3) === rowsOf(df), s"lead $lead, $t"))
+      assert(leftovers(root, good).isEmpty, s"lead $lead")
+    }
   }
 }
