@@ -66,7 +66,7 @@ object Tables {
     import org.apache.spark.sql.functions.expr
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
-      // legacy TIMESTAMP(NANOS) fixtures / the Stress generator's layout:
+      // legacy TIMESTAMP(NANOS) fixtures (FixtureContractSpec pins it):
       // raw nanos int64 → truncate to µs, expose as NTZ
       case LongType =>
         df.withColumn(

@@ -34,8 +34,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * trees and measures true rank error <= errBound on all of them).
   * Worst-case certificate magnitude: each compaction at level h promotes
   * k/2 items of weight 2^h, so C_h <= 2n/(k 2^h) and errBound <=
-  * 2 n L / k with L <= ceil(log2(n/k)) + 2 levels. Measured (tools/
-  * Stress, 6M lineitem prices, k=1024, 32 partial sketches merged):
+  * 2 n L / k with L <= ceil(log2(n/k)) + 2 levels. Measured (2026-08,
+  * with the since-deleted 10x scale probe: 6M lineitem prices, k=1024,
+  * 32 partial sketches merged):
   * retained = 953 items (~8 KB serialized), errBound = 65411 =
   * 10901 ppm of n — well under the ~25000 ppm theory ceiling.
   *

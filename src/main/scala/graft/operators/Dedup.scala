@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *  - Jaccard candidates come from a shingle inverted index (explode +
   *    self-equi-join on the shingle), NOT an O(n²) cross join. Its cost is
   *    sum(df²) over shingles, so a dense shingle distribution degenerates
-  *    quadratically — measured at 10x bench scale (graft.tools.Stress,
-  *    51k docs / 30-word vocab, identical pair sets): naive exact 62s /
+  *    quadratically — measured at 10x bench scale in 2026-08 (the
+  *    since-deleted scale probe, 51k docs / 30-word vocab, identical
+  *    pair sets): naive exact 62s /
   *    1 GiB shuffle; PPJoin-style prefix filtering (q101, still exact)
   *    12s / 225 MiB; MinHash+LSH 1.9s / ~0. q62 is the ground-truth
   *    baseline, q101 the optimized exact path, q63 the approximate
@@ -619,7 +620,8 @@ object Dedup extends QueryModule {
     * wraps, not replaces. The serialized filter round-trips through
     * `writeTo`/`readFrom`, so a daily pipeline persists it next to
     * q119's signature index instead of rebuilding (exercised in
-    * IncrementalDedupSpec). Measured at 10x bench scale (Stress): a
+    * IncrementalDedupSpec). Measured at 10x bench scale (2026-08, scale
+    * probe since deleted): a
     * 25.5k-row re-crawl batch against a 51k corpus routes 50.5% of rows
     * to the join (true dups + the configured ~1% false positives) in
     * 1.6 s — the definitely-new half never shuffles. */
@@ -1659,7 +1661,8 @@ object Dedup extends QueryModule {
         // The PREFIX-FILTERED exact kernel (q101), not the naive q62
         // baseline: same exact pair set, but candidates come from the
         // pigeonhole prefix slice — measured on the adversarially dense
-        // 51k Stress corpus: 37 s / 1 GiB shuffle naive vs 12.7 s
+        // 51k corpus of the since-deleted scale probe (2026-08): 37 s /
+        // 1 GiB shuffle naive vs 12.7 s
         // prefix-filtered, and only the latter's candidate count
         // survives 100 TB
         val jl = jaccardPrefixPairs(s, dir, 0.8)

@@ -3673,8 +3673,8 @@ object FeaturePlatform extends QueryModule {
           // driver scaling in BigInt: s1*10^6 bursts Long at ~9.2e12
           // total posterior mass (~9M tri-rated items) and a wrapped
           // prior would silently corrupt every pi cell where the
-          // HUGEINT oracle errors loudly — the 10x Stress run already
-          // sits within 1.5x of that ceiling
+          // HUGEINT oracle errors loudly — a 10x run of the since-deleted
+          // scale probe (2026-08) already sat within 1.5x of that ceiling
           val Mb = BigInt(M)
           val s1 = BigInt(r.getLong(0)); val s0 = BigInt(r.getLong(1))
           val p1 = (s1 * Mb / (s1 + s0)).toLong

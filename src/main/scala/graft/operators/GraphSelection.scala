@@ -1208,8 +1208,9 @@ object GraphSelection extends QueryModule {
         // the part dim by construction) ride broadcast semi joins and
         // each round runs EXCHANGE-FREE; a general graph whose survivor
         // set outgrows the threshold flips to shuffle semi joins with
-        // the same bit-exact fixpoint (GraphPathSpec + the 10x Stress
-        // probe run BOTH forms and assert equality).
+        // the same bit-exact fixpoint (GraphPathSpec runs BOTH forms and
+        // asserts equality; the since-deleted 10x scale probe repeated it
+        // on 6M rows in 2026-08).
         val edges = pairs
           .unionByName(pairs.select($"pb".as("pa"), $"pa".as("pb")))
           .repartition($"pa")
@@ -1236,7 +1237,8 @@ object GraphSelection extends QueryModule {
     * as shuffle semi joins — more exchanges, same unique fixpoint
     * (peel order never changes a k-core, so the two forms agree
     * BIT-EXACTLY; GraphPathSpec asserts it on the fixture graph, and
-    * the 10x Stress probe measured the 6M-row co-purchase graph:
+    * in 2026-08 the since-deleted 10x scale probe measured the 6M-row
+    * co-purchase graph:
     * broadcast form 6.9 s / 144.5 MiB shuffle, forced shuffle form
     * 8.3 s / 167.1 MiB, fixpoints identical). The
     * default threshold (1M nodes ~ 8 MB of longs) is the classic

@@ -32,7 +32,8 @@ object SequentialOps extends QueryModule {
         "(PlanSpec-gated) — and Catalyst's WindowGroupLimit pushes the " +
         "rank<=8 cap MAP-SIDE, so even that exchange carries at most " +
         "8 rows per (user x input partition): measured shuffle is an " +
-        "identical 34.6 MiB at 6M AND at 60M events (Stress, 1.1 s -> " +
+        "identical 34.6 MiB at 6M AND at 60M events (2026-08, scale " +
+        "probe since deleted; 1.1 s -> " +
         "4.5 s wall) — the carry is bounded by users, not history. " +
         "Ordering is bit-stable on both engines: " +
         "event_id breaks ts ties in the rank AND in the array_sort " +

@@ -194,8 +194,9 @@ object Similarity extends QueryModule {
   /** IVF-Flat ANN: corpus vectors bucketed by nearest-of-nlist coarse
     * centroid (narrow codegen'd TopCentroids projection), probes scan
     * their nprobe nearest inverted lists, exact cosine re-ranks. The
-    * q97 operator at its fixture parameters; Stress drives it at 100×
-    * corpus / 32× probes to measure the sub-linear candidate scan. */
+    * q97 operator at its fixture parameters; in 2026-08 the since-deleted
+    * scale probe drove it at 100× corpus / 32× probes to measure the
+    * sub-linear candidate scan. */
   def knnIvf(s: SparkSession, dir: String, k: Int, nProbes: Int,
       nlist: Int, nprobe: Int): DataFrame = {
     import graft.catalyst.VecOps.top_centroids
@@ -360,7 +361,8 @@ object Similarity extends QueryModule {
         "survivor rule). Rows-only (cluster geometry is quantizer-" +
         "defined); SemanticDedupSpec asserts member conservation, " +
         "subset-of-exact-pairs, and that a planted identical pair is " +
-        "always caught. Measured (Stress, 20k vectors, k=16): 12.5M " +
+        "always caught. Measured (2026-08, scale probe since " +
+        "deleted; 20k vectors, k=16): 12.5M " +
         "cluster-local candidate pairs vs 200M brute — 16.0x, exactly " +
         "n^2/k on uniform data — in 2.5 s including codebook training.",
       (s, dir) => {
@@ -689,10 +691,11 @@ object Similarity extends QueryModule {
         "Rows-only (list geometry is quantizer-defined); IvfIndexSpec " +
         "asserts merged-index recall >= the q97 gate vs brute force " +
         "over the SAME corpus, incremental assignment == full-rebuild " +
-        "assignment, and replay idempotence. Measured (Stress, 200k " +
-        "vectors): build 180k history 5.0 s; incremental add of a 20k " +
-        "batch 1.6 s with ZERO shuffle bytes and zero history reads — " +
-        "the add is O(batch) however large the index has grown.",
+        "assignment, and replay idempotence. Measured (2026-08, scale " +
+        "probe since deleted; 200k vectors): build 180k history 5.0 s; " +
+        "incremental add of a 20k batch 1.6 s with ZERO shuffle bytes " +
+        "and zero history reads — the add is O(batch) however large the " +
+        "index has grown.",
       (s, dir) => {
         import s.implicits._
         val e = Tables.t(s, dir, "embeddings")

@@ -344,7 +344,8 @@ object TrainingShards {
     * `broadcastKeyLimit` distinct keys and falls back to a shuffle
     * anti-join instead of forcing a driver-sized broadcast — counting
     * the delta's keys costs one job over the DELTA, never the corpus,
-    * and both forms are result-identical (Stress probes both). */
+    * and both forms are result-identical (TrainingShardsSpec "cdc merge"
+    * runs both). */
   def mergeVersion(s: SparkSession, path: String, changes: DataFrame,
       keyCol: String, seed: String, nShards: Int,
       maxRecordsPerFile: Long = 0L, sortColumns: Seq[String] = Nil,

@@ -99,7 +99,8 @@ object OpenSky {
     // r.time to from_json(value).time and must carry the raw multi-MB
     // response string through requiredChildOutput — copied into EVERY
     // exploded state row (20k rows x 3MB/doc = 60 GB for one real-sized
-    // snapshot; OOM found by the Stress ingest probe). This 3-step shape
+    // snapshot; OOM found in 2026-08 by the since-deleted scale probe's
+    // ingest run). This 3-step shape
     // keeps the generate's child output to an 8-byte long (asserted in
     // PlanSpec) AND parses each document exactly once: CollapseProject
     // refuses to duplicate the expensive from_json (SPARK-36718), whereas

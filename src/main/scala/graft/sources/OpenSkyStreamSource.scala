@@ -25,11 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * API bounds the guarantee to at-least-once, same class as the
   * reference).
   *
-  * Emits the raw envelope (`ts`, `raw_json`); parsing to typed rows is the
-  * same OpenSky.parseBatch pipeline used by the batch path. For the
-  * fixture-driven build the payload is the deterministic synthetic
-  * generator; `fetchUrl` would swap in the HTTP GET (zero-egress container
-  * → deliberately not exercised here).
+  * Emits the raw envelope (`tick`, `raw_json`); parsing to typed rows is
+  * the same OpenSky.parseBatch pipeline used by the batch path. The
+  * payload is always the deterministic `OpenSky.sampleResponse`
+  * generator: this source has no HTTP read. A live HTTP fetch
+  * (`OpenSkyHttpSource`) is read only by `graft.streaming.PollingIngest`;
+  * putting any `IngestSource` behind this stream is still open (ROADMAP.md,
+  * "One native ingest path").
   */
 class OpenSkyStreamSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

@@ -34,10 +34,12 @@ final class SyntheticOpenSkySource(statesPerTick: Int) extends IngestSource {
 
 /** The ingest control loop (SURVEY §2A A5-A7, §3.2), Spark-first:
   * every tick = fetch (driver; a single HTTP endpoint has nothing to
-  * partition) → parse/explode/project (Catalyst pipeline on executors) →
-  * fan-out append to all targets. Interval scheduling, 5s-class backoff on
-  * fetch errors, graceful stop, bounded run — the reference's semantics
-  * (main.go:101-127) with the §1.3 fix-list applied.
+  * partition) → parse/explode/project (the tick's body is a
+  * LocalRelation, so Catalyst folds the parse into a driver-side constant;
+  * PlanSpec "ingest parse" pins it) → fan-out append to all targets.
+  * Interval scheduling, 5s-class backoff on fetch errors, graceful stop,
+  * bounded run — the reference's semantics (main.go:101-127) with the §1.3
+  * fix-list applied.
   */
 object PollingIngest {
   private val log = LoggerFactory.getLogger(getClass)
@@ -49,6 +51,9 @@ object PollingIngest {
     /** Target appends that failed, summed over ticks (targets − written
       * per tick): a partial fan-out is warn-and-continue, never silent. */
     @volatile var failedAppends: Long = 0L
+    /** Ticks that threw before completing (fetch, parse or fan-out) and
+      * were backed off: a failed tick is counted, not only logged. */
+    @volatile var failedTicks: Long = 0L
     /** Run-unique base for batch ids: ticks restart at 0 every run, and
       * an idempotent sink keyed by bare tick numbers would sweep a
       * PREVIOUS run's rows (each poll tick carries different live data —
@@ -159,6 +164,7 @@ object PollingIngest {
       } catch {
         case e: Exception =>
           // warn-and-continue with backoff — never fatal mid-stream
+          handle.failedTicks += 1
           log.warn(s"ingest tick failed: ${e.getMessage}; backing off")
           sleepFn(cfg.backoffSec * 1000L)
       }

@@ -38,23 +38,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingOps extends QueryModule {
 
-  /** events schema in the LEGACY nanos layout (ts = raw nanos int64, which
-    * is how Spark reads parquet TIMESTAMP(NANOS) under nanosAsLong). Kept
-    * ONLY for the Stress generator, which deliberately writes this layout
-    * so the Long branch of [[graft.Tables.normalizeEventsTs]] stays
-    * exercised at 10–100× row scale. Fixture streams must NOT use a
-    * hard-coded schema: round 7 proved a declared schema that contradicts
-    * the footer corrupts silently (µs int64s read as "nanos", every
-    * timestamp shrunk 1000×) — [[eventsStream]] now derives its schema
-    * from the footer instead. */
-  val eventsLegacyNanosSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Streaming read of the events fixture with the same ts normalization
     * as the batch loader. The file streaming source requires a directory,
     * so the single fixture file is exposed through a per-sf symlink dir
@@ -84,7 +67,8 @@ object StreamingOps extends QueryModule {
     if (Files.isDirectory(src)) {
       // a Spark-written table is a DIRECTORY of part files; the file
       // streaming source does not recurse into a linked subdirectory (it
-      // would read 0 rows silently — bit the Stress probe), so flatten:
+      // would read 0 rows silently — hit in 2026-08 by the since-deleted
+      // scale probe), so flatten:
       // link each part file directly into the stream dir
       val listing = Files.list(src)
       try listing.forEach { p =>
@@ -263,7 +247,8 @@ object StreamingOps extends QueryModule {
     * ones leave the store on emission) — the property that keeps a
     * 100 TB/day clickstream sessionizer from accumulating history.
     *
-    * Cadence caveat (measured in the Stress probe): RocksDB list MERGE
+    * Cadence caveat (measured 2026-08 with the since-deleted scale
+    * probe): RocksDB list MERGE
     * appends run ~11k rows/s/task, so this raw-event-buffering form fits
     * LIVE arrival rates; replaying a 60M-row backlog through it hits the
     * append wall. Backfills belong on the batch gaps-and-islands form

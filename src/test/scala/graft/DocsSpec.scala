@@ -96,6 +96,29 @@ class DocsSpec extends AnyFunSuite {
         s"${phantom.toSeq.sorted.mkString(", ")}")
   }
 
+  test("README names only live tools and env knobs") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mainSrc =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8)).mkString("\n")
+      finally files.close()
+    val envReads = raw"""sys\.env(?:\.\w+)?\(\s*"(SPARK_GRAFT_[A-Z_]+)"""".r
+      .findAllMatchIn(mainSrc).map(_.group(1)).toSet
+    val knobs = raw"SPARK_GRAFT_[A-Z_]+".r.findAllIn(readme).toSet
+    assert((knobs -- envReads).isEmpty,
+      s"README names env knobs no sys.env read in src/main/scala takes: " +
+        s"${(knobs -- envReads).toSeq.sorted.mkString(", ")}")
+    val tools = raw"graft\.tools\.([A-Z]\w*)".r.findAllMatchIn(readme)
+      .map(_.group(1)).toSet
+    val dead = tools.filter(t =>
+      scala.util.Try(Class.forName(s"graft.tools.$t$$", false,
+        getClass.getClassLoader)).isFailure)
+    assert(dead.isEmpty,
+      s"README names tools that do not load: ${dead.toSeq.sorted.mkString(", ")}")
+  }
+
   test("SURVEY §8 status line matches the registry") {
     val survey = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SURVEY.md")),

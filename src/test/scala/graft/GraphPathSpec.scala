@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * form (general graph, survivor list too big to broadcast) must reach
   * the SAME fixpoint bit-for-bit — peeling's fixpoint is unique
   * regardless of order or physical plan, and the gate must never be
-  * able to change an answer, only a cost. The 10x Stress probe repeats
-  * this equality on the 6M-row co-purchase graph. */
+  * able to change an answer, only a cost. A since-deleted 10x scale
+  * probe repeated this equality on the 6M-row co-purchase graph
+  * (2026-08). */
 class GraphPathSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._

@@ -73,6 +73,7 @@ class HttpSourceSpec extends AnyFunSuite {
       assert(h.ticks === 1)
       assert(calls === 4) // validate + 2 failed fetches + 1 success
       assert(backoffs === 2)
+      assert(h.failedTicks === 2)
     }
   }
 

@@ -156,7 +156,8 @@ class IngestSpec extends AnyFunSuite {
     val h = PollingIngest.run(spark, source, cfg, new ParquetSink(root),
       maxTicks = 2, sleepFn = _ => backoffs += 1)
     assert(h.ticks === 2)       // reached despite alternating failures
-    assert(calls >= 4)          // 2 failures + 2 successes
+    assert(h.failedTicks === 2) // each failed fetch is counted
+    assert(calls === 4)         // 2 failures + 2 successes
   }
 
   test("config: YAML subset parses with reference defaults + zero-as-default pool") {

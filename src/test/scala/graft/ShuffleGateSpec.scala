@@ -4,10 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Asserted regression gate for the measured shuffle-byte advantage of
   * the prefix-filtered exact Jaccard plan (q101) over the naive inverted
-  * index (q62): the Stress probe's 10x numbers (225 MiB vs 1.03 GiB for
-  * the identical pair set) are cited as optimization evidence — this pins
-  * the ratio on a shrunk copy of the same dense-vocab corpus so the
-  * advantage cannot silently erode. */
+  * index (q62): the 10x numbers of a since-deleted scale probe (2026-08:
+  * 225 MiB vs 1.03 GiB for the identical pair set) are cited as
+  * optimization evidence — this pins the ratio on a shrunk copy of the
+  * same dense-vocab corpus so the advantage cannot silently erode. */
 class ShuffleGateSpec extends AnyFunSuite {
   import TestSession._
 
@@ -59,7 +59,8 @@ class ShuffleGateSpec extends AnyFunSuite {
       assert(nNaive >= 100L, s"planted near-dups must qualify (got $nNaive)")
       assert(bNaive > 0L, "naive plan must register shuffle writes")
       val ratio = bPrefix.toDouble / bNaive
-      // measured ~0.22 at 10x Stress scale and well below 0.5 here;
+      // measured ~0.22 at 10x scale (2026-08, scale probe since
+      // deleted) and well below 0.5 here;
       // 0.6 leaves noise headroom while still catching a regression to
       // full-index candidate generation
       assert(ratio < 0.6,

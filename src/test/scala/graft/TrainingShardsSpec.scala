@@ -332,6 +332,17 @@ class TrainingShardsSpec extends AnyFunSuite {
       .filter($"doc_id" === probe).select($"cents")
       .head().getLong(0) == was)
     assert(TrainingShards.readVersion(spark, root, Some(v1)).count() == n1)
+    // gate-forced shuffle anti-join gives the identical result
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"doc_id", $"cents").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val root2 = java.nio.file.Files
+      .createTempDirectory("graft_snap_merge2").toString
+    TrainingShards.writeVersion(o, root2, "s", 2)
+    val v2b = TrainingShards.mergeVersion(spark, root2, changes,
+      "doc_id", "s", 2, broadcastKeyLimit = 0L)
+    assert(rows(TrainingShards.readVersion(spark, root2, Some(v2b)))
+      == rows(m), "the size-gated shuffle form must match broadcast")
   }
 
   test("bloom manifest lifecycle: per-batch append bit-equals the " +
