@@ -1,6 +1,7 @@
 package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graft.ColumnBridgeImpl
 import org.slf4j.LoggerFactory
 
 /** Append sink abstraction + multi-target fan-out (SURVEY §2A rows A5,
@@ -9,8 +10,9 @@ import org.slf4j.LoggerFactory
   * The reference fans each batch out to every (db, table) over per-table
   * goroutines with racy channel teardown (main.go:149-155, SURVEY §1.3-4)
   * and row-at-a-time INSERTs inside a broken per-record-commit tx
-  * (main.go:181-210, §1.3-3). Spark-first replacement: persist the batch
-  * once, then write it to every target at once — one writer thread per
+  * (main.go:181-210, §1.3-3). Spark-first replacement: materialize the
+  * batch once (a poll tick is decoded on the driver; any other batch is
+  * persisted), then write it to every target at once — one writer thread per
   * target, all joined before the batch (poll tick / micro-batch) ends —
   * with batched appends and per-partition parallelism inside each write.
   * Delivery is at-least-once per micro-batch (same guarantee class as the
@@ -357,12 +359,18 @@ object JdbcSink {
 object Fanout {
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** Write one batch to every target. Persist once so the (possibly
-    * expensive) upstream plan runs a single time, not once per target;
-    * then append to all targets concurrently, one writer thread per
-    * target (the reference's per-table goroutines, main.go:149-155);
-    * warn-and-continue per target (the reference's error policy,
-    * main.go:198-203).
+  /** Write one batch to every target: append to all targets
+    * concurrently, one writer thread per target (the reference's
+    * per-table goroutines, main.go:149-155); warn-and-continue per target
+    * (the reference's error policy, main.go:198-203).
+    *
+    * A driver-local batch (a `LocalRelation`, as `OpenSky.parseJson`
+    * gives a poll tick) is already materialized: its row count comes from
+    * the relation, and every target gets it as one partition — a local
+    * scan would otherwise split it into `defaultParallelism` files per
+    * target. Any other batch is persisted once so its (possibly
+    * expensive) upstream plan runs a single time, not once per target,
+    * and counted before the appends.
     *
     * A poll tick is one JSON document, so its batch is one partition and
     * each append is a one-task job: run in turn, the appends would leave
@@ -371,7 +379,7 @@ object Fanout {
     * properties — inside `foreachBatch` the streaming query's job group,
     * which `StreamingQuery.stop` cancels. Returns only after every
     * started append has returned, also on failure or interrupt (the
-    * interrupt status is restored, not passed on to the writers), so the
+    * interrupt status is restored, not passed on to the writers), so a
     * cached batch is never released under a reader, a replayed batch
     * never overlaps a writer of the failed attempt, and per-target order
     * across batches is the call order. An append's `Exception` is
@@ -395,12 +403,20 @@ object Fanout {
     *                (db_manager.go). Spark's task slots cap what actually
     *                runs. <=0 or None leaves the upstream partitioning
     *                alone. Coalesce, not repartition: narrows without a
-    *                shuffle.
+    *                shuffle. A local batch is written as one partition
+    *                whatever the cap.
     * @return (targets written successfully, rows in the batch) — the row
     *         count rides along so callers don't re-execute the plan */
   def writeBatch(df: DataFrame, targets: Seq[(String, String)],
       sink: AppendSink, batchId: Long = 0L,
-      writeWorkers: Option[Int] = None): (Int, Long) = {
+      writeWorkers: Option[Int] = None): (Int, Long) =
+    ColumnBridgeImpl.localRows(df) match {
+      case Some(rows) => (appendAll(df.coalesce(1), targets, sink, batchId), rows)
+      case None => writeCached(df, targets, sink, batchId, writeWorkers)
+    }
+
+  private def writeCached(df: DataFrame, targets: Seq[(String, String)],
+      sink: AppendSink, batchId: Long, writeWorkers: Option[Int]): (Int, Long) = {
     val cached = df.persist()
     try {
       val rows = cached.count() // materialize once before the per-target writes

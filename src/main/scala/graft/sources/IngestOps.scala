@@ -13,8 +13,8 @@ object IngestOps extends QueryModule {
   override def queries: Seq[Q] = Seq(
     Q(
       "q80_ingest_parse",
-      "OpenSky envelope → rows: from_json + explode + positional casts " +
-        "(SURVEY A2-A4). Produces the typed 18-column flights schema in " +
+      "OpenSky envelope → rows: one streaming decode per document with " +
+        "Spark's positional casts (SURVEY A2-A4). Produces the typed 18-column flights schema in " +
         "canonical acc_init.sql order; aggregates per origin_country to " +
         "prove the full decode path.",
       (s, _) => {

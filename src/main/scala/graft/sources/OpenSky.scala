@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.graft.ColumnBridgeImpl
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Typed record for one flight state vector, in the canonical column order
@@ -29,8 +31,9 @@ final case class FlightState(
     spi: Option[Boolean],
     position_source: Option[Int])
 
-/** The OpenSky states/all ingest pipeline, Spark-first (SURVEY §2A rows
-  * A2-A4): JSON decode → explode(states) → positional cast/projection.
+/** The OpenSky states/all ingest parse (SURVEY §2A rows A2-A4): one
+  * streaming decode of each response document straight into typed rows
+  * ([[StatesDecoder]]), the positional casts done by Spark's own `Cast`.
   *
   * The reference's equivalent path is broken in production (type-switch
   * mismatch, main.go:137-146 vs opensky_plugin.go:107-114 — SURVEY
@@ -39,17 +42,12 @@ final case class FlightState(
   */
 object OpenSky {
 
-  /** Envelope schema: SkyResponse{time, states[][]} (opensky_plugin.go:23-26).
-    * Inner values decode as strings and are cast positionally — explicit
-    * casts, never inference (the float64-vs-int coercion that disabled the
-    * reference's own assertions, opensky_plugin_test.go:104-115). */
-  val envelopeSchema: StructType = StructType(Seq(
-    StructField("time", LongType),
-    StructField("states", ArrayType(ArrayType(StringType)))))
-
   /** (name, sparkType) per state-vector position, acc_init.sql order.
     * Position 0 of the vector is icao24; the envelope `time` is prepended
-    * as the first output column. */
+    * as the first output column. Cells are read as strings and cast
+    * positionally — explicit casts, never inference (the float64-vs-int
+    * coercion that disabled the reference's own assertions,
+    * opensky_plugin_test.go:104-115). */
   val stateColumns: Seq[(String, DataType)] = Seq(
     "icao24" -> StringType,
     "callsign" -> StringType,
@@ -85,53 +83,36 @@ object OpenSky {
     mysqlTypes.map { case (n, t) => s"  $n $t" }
       .mkString(s"CREATE TABLE IF NOT EXISTS $table (\n", ",\n", "\n)")
 
-  /** Raw JSON response bodies → one typed row per state vector.
-    *
-    * Pure Column pipeline (from_json → explode → element_at + cast): stays
-    * inside whole-stage codegen, parallel over however many response
-    * documents the batch carries.
-    */
+  /** The flights table (FIXTURES.md §2): the envelope `time`, then the
+    * state-vector columns; every column nullable. */
+  val flightsSchema: StructType = StructType(StructField("time", LongType) +:
+    stateColumns.map { case (name, dt) => StructField(name, dt) })
+
+  /** Raw JSON response bodies → one typed row per state vector, decoded
+    * inside each partition by one [[StatesDecoder]] pass per document (the
+    * stream source and DSv2 batches arrive RDD-backed). A malformed body
+    * fails its task. */
   def parseBatch(spark: SparkSession, raw: Dataset[String]): Dataset[FlightState] = {
     import spark.implicits._
-    // Materialize BOTH envelope fields in a projection BELOW the explode.
-    // With the envelope scalar extracted only ABOVE the generate
-    // (select(r).select(r.time, explode(r.states))), Catalyst rewrites
-    // r.time to from_json(value).time and must carry the raw multi-MB
-    // response string through requiredChildOutput — copied into EVERY
-    // exploded state row (20k rows x 3MB/doc = 60 GB for one real-sized
-    // snapshot; OOM found in 2026-08 by the since-deleted scale probe's
-    // ingest run). This 3-step shape
-    // keeps the generate's child output to an 8-byte long (asserted in
-    // PlanSpec) AND parses each document exactly once: CollapseProject
-    // refuses to duplicate the expensive from_json (SPARK-36718), whereas
-    // writing from_json(...).getField twice yields two schema-pruned
-    // JsonToStructs that subexpression elimination can never merge.
-    // The explode is an OUTER one whose empty-array row is dropped by its
-    // position: for a plain explode, InferFiltersFromGenerate adds
-    // `size(states) > 0 AND isnotnull(states)`, pushed below the projection
-    // as two more from_json(value) per document on an RDD-backed input
-    // (a LocalRelation folds the parse into a constant; PlanSpec asserts).
-    val env = raw.toDF("value")
-      .select(from_json($"value", envelopeSchema).as("r"))
-      .select($"r.time".as("snapshot_time"), $"r.states".as("states"))
-    val parsed = env.select($"snapshot_time", posexplode_outer($"states").as(Seq("pos", "state")))
-      .where($"pos".isNotNull)
-    val cols = col("snapshot_time").as("time") +:
-      stateColumns.zipWithIndex.map { case ((name, dt), i) =>
-        val v = element_at(col("state"), i + 1)
-        (dt match {
-          // sensors arrives as a JSON array literal inside a string cell
-          case ArrayType(IntegerType, _) => from_json(v, ArrayType(IntegerType))
-          case other => v.cast(other)
-        }).as(name)
-      }
-    parsed.select(cols: _*).as[FlightState]
+    val decoder = StatesDecoder(spark)
+    raw.mapPartitions { bodies =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(flightsSchema)
+      decoder.decode(bodies).map(toRow(_).asInstanceOf[Row])
+    }(Encoders.row(flightsSchema)).as[FlightState]
   }
 
-  /** Convenience: parse a batch already shaped as one JSON string column. */
+  /** Response bodies → typed rows, decoded on the driver into a local
+    * frame (a `LocalRelation`: its row count is known without a job, and
+    * `Fanout.writeBatch` writes it without caching). A poll tick is one
+    * document, so there is nothing to distribute before the write. Throws
+    * on a malformed body. */
   def parseJson(spark: SparkSession, jsons: Seq[String]): Dataset[FlightState] = {
     import spark.implicits._
-    parseBatch(spark, spark.createDataset(jsons))
+    val decoder = StatesDecoder(spark)
+    val rows = SQLConf.withExistingConf(ColumnBridgeImpl.sqlConf(spark)) {
+      decoder.decode(jsons.iterator).map(_.copy()).toVector
+    }
+    ColumnBridgeImpl.localFrame(spark, flightsSchema, rows).as[FlightState]
   }
 
   /** Deterministic synthetic response for tests/demos (shape per

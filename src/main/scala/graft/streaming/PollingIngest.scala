@@ -34,12 +34,14 @@ final class SyntheticOpenSkySource(statesPerTick: Int) extends IngestSource {
 
 /** The ingest control loop (SURVEY §2A A5-A7, §3.2), Spark-first:
   * every tick = fetch (driver; a single HTTP endpoint has nothing to
-  * partition) → parse/explode/project (the tick's body is a
-  * LocalRelation, so Catalyst folds the parse into a driver-side constant;
-  * PlanSpec "ingest parse" pins it) → fan-out append to all targets.
-  * Interval scheduling, 5s-class backoff on fetch errors, graceful stop,
-  * bounded run — the reference's semantics (main.go:101-127) with the §1.3
-  * fix-list applied.
+  * partition) → decode the body on the driver straight into typed rows
+  * (`OpenSky.parseJson`: one streaming pass, a LocalRelation whose row
+  * count is known; PlanSpec "ingest parse" pins it) → fan-out append to
+  * all targets, whose only Spark job is the parquet write. A body that is
+  * not a states document throws, so the tick fails and backs off instead
+  * of writing an empty batch. Interval scheduling, 5s-class backoff on
+  * fetch and parse errors, graceful stop, bounded run — the reference's
+  * semantics (main.go:101-127) with the §1.3 fix-list applied.
   */
 object PollingIngest {
   private val log = LoggerFactory.getLogger(getClass)

@@ -8,7 +8,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.slf4j.LoggerFactory
 
 /** The fully Spark-native ingest (SURVEY §7 M5 complete): DSv2 micro-batch
-  * source → parse pipeline → foreachBatch multi-table fan-out.
+  * source → `OpenSky.parseBatch` (the poll path's decoder, run inside each
+  * partition: one pass per document) → foreachBatch multi-table fan-out,
+  * which persists and counts the RDD-backed batch before its appends.
   *
   * This is the reference's whole product as one streaming query:
   *  - trigger interval  = plugin_spec.config.interval (A6)

@@ -2,8 +2,12 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Spark 4 made Column construction go through the (package-private)
   * classic.ExpressionUtils; this bridge re-exports the two conversions the
@@ -22,6 +26,24 @@ object ColumnBridgeImpl {
   def ofRows(spark: SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The session's SQLConf (ANSI mode, time zone) for expressions built
+    * outside a query. */
+  def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** DataFrame over rows already on the driver: a `LocalRelation`, so
+    * `Dataset.isLocal` holds and [[localRows]] knows its size. */
+  def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): org.apache.spark.sql.DataFrame =
+    ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Row count of a frame over a `LocalRelation`, read from the relation
+    * without running a job; None for any other plan. */
+  def localRows(df: org.apache.spark.sql.DataFrame): Option[Long] = plan(df) match {
+    case l: LocalRelation => Some(l.data.size.toLong)
+    case _ => None
+  }
 
   /** Block until the async listener bus has delivered all queued events
     * (private[spark]); instrumentation that reads listener-fed counters

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * possible), merge-equals-recompute over arbitrary change sets,
   * effect-once replay, and the age-gated orphan vacuum — plus the
   * version-log contracts it shares with the full-rewrite store. */
-class CowSpec extends AnyFunSuite {
+class CowSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("shard routing is key-stable: a key's shard never depends on " +
@@ -93,8 +93,7 @@ class CowSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cow_stale").toString
+    val root = tempDir("graft_cow_stale")
     val v1 = store.write(o, root, Some("old"))
     // populate the cache through a real read
     val n1 = store.read(root, v1).count()
@@ -160,8 +159,7 @@ class CowSpec extends AnyFunSuite {
         cow.write(o, root, None); cow.expire(root): Unit },
       "GenDir.publish" -> (GenDir.publish(spark, _, o)))
     cases.foreach { case (verb, run) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_vacuum").toString
+      val root = tempDir("graft_vacuum")
       Fs.touch(spark, s"$root/_staging/fresh/leftover")
       Fs.touch(spark, s"$root/_staging/aged/leftover")
       ageOut(s"$root/_staging/aged")
@@ -181,8 +179,7 @@ class CowSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cow_lostupd").toString
+    val root = tempDir("graft_cow_lostupd")
     CowSnapshots.writeVersion(o, root, "doc_id", "s", 8)
     val keys = o.orderBy($"doc_id").limit(2)
       .select($"doc_id").as[Long].collect()
@@ -226,8 +223,7 @@ class CowSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cow_spec").toString
+    val root = tempDir("graft_cow_spec")
     val v1 = CowSnapshots.writeVersion(o, root, "doc_id", "s", 8)
     val mx = o.agg(max($"doc_id")).head().getLong(0)
     // a DENSE change set (every %10 tranche) — worst case for reuse,
@@ -251,8 +247,7 @@ class CowSpec extends AnyFunSuite {
     assert(rows(CowSnapshots.readVersion(spark, root, Some(v1)))
       == rows(o), "the pinned parent must be untouched")
     // gate-forced shuffle anti-join gives the identical result
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft_cow_spec2").toString
+    val root2 = tempDir("graft_cow_spec2")
     CowSnapshots.writeVersion(o, root2, "doc_id", "s", 8)
     val v2b = CowSnapshots.mergeVersion(spark, root2, changes,
       "doc_id", "s", 8, broadcastKeyLimit = 0L)
@@ -268,8 +263,7 @@ class CowSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cow_mor_spec").toString
+    val root = tempDir("graft_cow_mor_spec")
     val mx = o.agg(max($"doc_id")).head().getLong(0)
     val keys = o.orderBy($"doc_id").limit(3)
       .select($"doc_id").as[Long].collect()
@@ -329,8 +323,7 @@ class CowSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cow_bloomchain").toString
+    val root = tempDir("graft_cow_bloomchain")
     val keys = o.orderBy($"doc_id").limit(2)
       .select($"doc_id").as[Long].collect()
     val Array(kUpd, kDel) = keys
@@ -398,8 +391,7 @@ class CowSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cow_replay").toString
+    val root = tempDir("graft_cow_replay")
     val v1 = CowSnapshots.writeVersion(o, root, "doc_id", "s", 4,
       batchId = Some("b0"))
     val mx = o.agg(max($"doc_id")).head().getLong(0)

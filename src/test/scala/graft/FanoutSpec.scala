@@ -17,6 +17,15 @@ class FanoutSpec extends AnyFunSuite {
 
   private val targets = (1 to 4).map(i => (s"db$i", "t"))
   private def batch: DataFrame = spark.range(0, 10, 1, numPartitions = 1).toDF("v")
+  /** A driver-local batch (a LocalRelation), as a decoded poll tick is. */
+  private def localBatch: DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val df = spark.createDataFrame((0 until 10).map(Row(_)).asJava,
+      StructType(Seq(StructField("v", IntegerType))))
+    assert(df.isLocal)
+    df
+  }
 
   /** Sink whose every append runs `body(db)`. */
   private def sinkOf(body: String => Unit): AppendSink = new AppendSink {
@@ -58,7 +67,7 @@ class FanoutSpec extends AnyFunSuite {
 
   /** One target fails at once, the others set a flag after 300 ms; with
     * `interrupt` the caller is interrupted once all of them have started. */
-  private def barrierCase(interrupt: Boolean): Unit = {
+  private def barrierCase(interrupt: Boolean, batch: DataFrame = batch): Unit = {
     val flags = targets.map(_ => new AtomicBoolean(false))
     val started = new CountDownLatch(targets.size)
     val sink = sinkOf { db =>
@@ -95,7 +104,25 @@ class FanoutSpec extends AnyFunSuite {
     barrierCase(interrupt = true)
   }
 
-  test("an Error from one append is rethrown after the others, batch released") {
+  test("on a local batch: an interrupted caller still waits for every append") {
+    barrierCase(interrupt = true, localBatch)
+  }
+
+  test("a local batch is written as one partition, counted without a job") {
+    val parts = new ConcurrentLinkedQueue[Int]
+    val sink = new AppendSink {
+      override def append(df: DataFrame, db: String, table: String): Unit = {
+        parts.add(df.rdd.getNumPartitions); ()
+      }
+    }
+    val rec = graft.tools.Profile.record(spark)(
+      Fanout.writeBatch(localBatch, targets, sink, writeWorkers = Some(4)))
+    assert(rec.result === ((targets.size, 10L)))
+    assert(rec.jobs.isEmpty, s"jobs: ${rec.jobs.map(_.callSite)}")
+    assert(parts.asScala.toSeq === Seq.fill(targets.size)(1))
+  }
+
+  private def errorCase(batch: DataFrame): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.size
     val finished = new AtomicInteger(0)
     val sink = sinkOf { db =>
@@ -107,5 +134,13 @@ class FanoutSpec extends AnyFunSuite {
     assert(e.getMessage === "fatal append")
     assert(finished.get === targets.size - 1)
     assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
+
+  test("an Error from one append is rethrown after the others, batch released") {
+    errorCase(batch)
+  }
+
+  test("on a local batch: an Error from one append is rethrown after the others") {
+    errorCase(localBatch)
   }
 }

@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    at every crash point of a publish — each intermediate state is
   *    constructed on disk and read back.
   */
-class FsSpec extends AnyFunSuite {
+class FsSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   private def mkDirWithFile(path: String, name: String): Unit = {
@@ -31,8 +31,7 @@ class FsSpec extends AnyFunSuite {
 
   test("claim refuses an existing destination instead of nesting " +
     "(the FileSystem.rename mv-semantics bug)") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_fs_claim").toString
+    val root = tempDir("graft_fs_claim")
     mkDirWithFile(s"$root/src_a", "a")
     mkDirWithFile(s"$root/dst", "owner")
     assert(!Fs.claim(spark, s"$root/src_a", s"$root/dst"),
@@ -47,8 +46,7 @@ class FsSpec extends AnyFunSuite {
   test("claimRaw race: two lock-free claimants (two 'drivers'), one " +
     "destination — exactly one winner, loser's bytes intact") {
     (1 to 5).foreach { round =>
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_fs_race$round").toString
+      val root = tempDir(s"graft_fs_race$round")
       mkDirWithFile(s"$root/src_a", "payload_a")
       mkDirWithFile(s"$root/src_b", "payload_b")
       val gate = new java.util.concurrent.CountDownLatch(2)
@@ -73,8 +71,7 @@ class FsSpec extends AnyFunSuite {
 
   test("withLease: cross-driver critical sections never overlap, and " +
     "a stale (crashed-holder) lease is broken") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_fs_lease").toString
+    val root = tempDir("graft_fs_lease")
     val lease = s"$root/_lease"
     val inside = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxSeen = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -111,8 +108,7 @@ class FsSpec extends AnyFunSuite {
     "breaker legitimately took over must NOT release the successor's " +
     "live lease — the third-holder admission an unconditional release " +
     "delete allowed") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_fs_lease_tok").toString
+    val root = tempDir("graft_fs_lease_tok")
     val lease = s"$root/_lease"
     val aDone = new java.util.concurrent.CountDownLatch(1)
     val bHolds = new java.util.concurrent.CountDownLatch(1)
@@ -148,8 +144,7 @@ class FsSpec extends AnyFunSuite {
   test("GenDir: every crash point of a publish leaves a complete, " +
     "resolvable artifact at the public root") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_fs_gendir").toString + "/store"
+    val root = tempDir("graft_fs_gendir") + "/store"
     def gen1Rows = Seq((1L, "a")).toDF("k", "v")
     def gen2Rows = Seq((2L, "b"), (3L, "c")).toDF("k", "v")
     GenDir.publish(spark, root, gen1Rows)

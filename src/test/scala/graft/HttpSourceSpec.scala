@@ -2,7 +2,7 @@ package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.config.{IngestConfig, TlsConfig}
-import graft.sink.ParquetSink
+import graft.sink.{IdempotentParquetSink, ParquetSink}
 import graft.sources.{OpenSky, OpenSkyHttpSource}
 import graft.streaming.PollingIngest
 import java.net.InetSocketAddress
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The real HTTP polling source against a local JDK HttpServer stub —
   * the fixture-server strategy of the reference's own tests, but wired
   * through the full Spark ingest pipeline. */
-class HttpSourceSpec extends AnyFunSuite {
+class HttpSourceSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   private def withServer(handler: HttpExchange => Unit)(body: String => Unit): Unit = {
@@ -36,7 +36,7 @@ class HttpSourceSpec extends AnyFunSuite {
       ok(ex, OpenSky.sampleResponse(25))
     } { url =>
       val src = new OpenSkyHttpSource(url, "user1", "sekrit")
-      val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+      val root = tempDir("graft_http")
       val cfg = IngestConfig(runForSec = 0)
       val h = PollingIngest.run(spark, src, cfg, new ParquetSink(root),
         maxTicks = 2, sleepFn = _ => ())
@@ -66,7 +66,7 @@ class HttpSourceSpec extends AnyFunSuite {
       else ok(ex, OpenSky.sampleResponse(5))
     } { url =>
       val src = new OpenSkyHttpSource(url, "u", "p")
-      val root = java.nio.file.Files.createTempDirectory("graft_http2").toString
+      val root = tempDir("graft_http2")
       var backoffs = 0
       val h = PollingIngest.run(spark, src, IngestConfig(runForSec = 0),
         new ParquetSink(root), maxTicks = 1, sleepFn = _ => backoffs += 1)
@@ -74,6 +74,30 @@ class HttpSourceSpec extends AnyFunSuite {
       assert(calls === 4) // validate + 2 failed fetches + 1 success
       assert(backoffs === 2)
       assert(h.failedTicks === 2)
+    }
+  }
+
+  test("a malformed 200 body fails its tick, backs off and writes nothing") {
+    var calls = 0
+    val body = OpenSky.sampleResponse(5)
+    withServer { ex =>
+      calls += 1
+      // call 1 = validate; call 2 = a body cut off mid-document, status
+      // 200; call 3 = healthy
+      ok(ex, if (calls == 2) body.take(body.length / 2) else body)
+    } { url =>
+      val root = tempDir("graft_http3")
+      val cfg = IngestConfig(runForSec = 0)
+      var backoffs = 0
+      val h = PollingIngest.run(spark, new OpenSkyHttpSource(url, "u", "p"), cfg,
+        new IdempotentParquetSink(root), maxTicks = 1, sleepFn = _ => backoffs += 1)
+      assert(calls === 3)
+      assert(h.ticks === 1 && h.rowsIngested === 5L)
+      assert(h.failedTicks === 1 && backoffs === 1)
+      cfg.targets("flights").foreach { case (db, t) =>
+        val batches = new java.io.File(s"$root/$db/$t").list().filter(_.startsWith("batch="))
+        assert(batches.length === 1, s"$db.$t: ${batches.toSeq}") // the healthy tick's only
+      }
     }
   }
 

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Ingest parity (SURVEY §2A / §7 M2): schema order, parse semantics,
   * topology expansion, fan-out delivery, error policy, config loading. */
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("flights schema is in canonical acc_init.sql order") {
@@ -74,7 +74,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("end-to-end: 2 ticks fan out to every target with identical rows") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ingest_e2e").toString
+    val root = tempDir("graft_ingest_e2e")
     val cfg = IngestConfig(
       plugin = PluginSpec(intervalSec = 1),
       databases = DatabasesConfig(prefix = "db", copies = 2, extra = Map("x" -> 2)),
@@ -94,7 +94,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("fan-out: failing target is skipped with warn-and-continue") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ingest_err").toString
+    val root = tempDir("graft_ingest_err")
     val inner = new ParquetSink(root)
     def failingOn(bad: String) = new AppendSink {
       override def append(df: DataFrame, db: String, table: String): Unit = {
@@ -151,7 +151,7 @@ class IngestSpec extends AnyFunSuite {
       }
     }
     var backoffs = 0
-    val root = java.nio.file.Files.createTempDirectory("graft_ingest_flaky").toString
+    val root = tempDir("graft_ingest_flaky")
     val cfg = IngestConfig(runForSec = 0, backoffSec = 1)
     val h = PollingIngest.run(spark, source, cfg, new ParquetSink(root),
       maxTicks = 2, sleepFn = _ => backoffs += 1)

@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * the matching partitions — at 100 TB the difference between scanning
   * 1/N of the lake and all of it.
   */
-class PartitionPruningSpec extends AnyFunSuite {
+class PartitionPruningSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("range-clustered layout: min-max stats skip row groups a random layout scans") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val base = tempDir("graft_layout")
     // sf0.1: 100k events — big enough that the reader's 1000-row metric
     // checkpointing can't mask the contrast the smaller fixtures would
     val events = Tables.t(spark, "/root/testdata/sf0.1", "events")
@@ -66,7 +66,7 @@ class PartitionPruningSpec extends AnyFunSuite {
 
   test("z-order layout: a 2D box predicate decodes fewer rows than a 1D sort") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val base = tempDir("graft_zorder")
     // two query dimensions: user and event time, both normalized to a
     // 10-bit grid; z interleaves the bits so files/row-groups cluster in
     // BOTH dims at once — the multi-dim generalization of the 1D
@@ -127,7 +127,7 @@ class PartitionPruningSpec extends AnyFunSuite {
 
   test("hive-style partitioned write + partition-pruned read") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_part").toString + "/events"
+    val root = tempDir("graft_part") + "/events"
     Tables.t(spark, sfDir, "events")
       .write.partitionBy("event_type").mode("overwrite").parquet(root)
 
@@ -150,7 +150,7 @@ class PartitionPruningSpec extends AnyFunSuite {
 
   test("dynamic partition pruning: a dim filter prunes fact partitions at runtime") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_dpp").toString + "/events"
+    val root = tempDir("graft_dpp") + "/events"
     Tables.t(spark, sfDir, "events")
       .write.partitionBy("event_type").mode("overwrite").parquet(root)
     val fact = spark.read.parquet(root)
@@ -158,7 +158,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     // can't see it; DPP must push a runtime subquery into the fact scan.
     // The dim is parquet-backed: over a local Seq, ConvertToLocalRelation
     // folds the filter away and DPP sees no selective predicate.
-    val dimPath = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimPath = tempDir("graft_dpp_dim")
     Seq(("error", 1), ("click", 0), ("view", 0), ("purchase", 0), ("signup", 0))
       .toDF("etype", "flag").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter($"flag" === 1)

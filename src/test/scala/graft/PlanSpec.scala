@@ -37,43 +37,33 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("ingest parse: the explode carries only envelope scalars per state row") {
+  test("ingest parse: no from_json or explode in a local tick; an RDD batch decodes once") {
     import graft.sources.OpenSky
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation, MapPartitions}
     import org.apache.spark.sql.execution.GenerateExec
     import spark.implicits._
     val docs = Seq(OpenSky.sampleResponse(5))
-    // PollingIngest parses a LocalRelation, where ConvertToLocalRelation
-    // folds from_json into a driver-side constant; the stream source and
-    // DSv2 hand it an RDD-backed frame, which keeps every parse in the plan
-    Seq("local" -> OpenSky.parseJson(spark, docs).toDF(),
-      "rdd" -> OpenSky.parseBatch(spark, spark.sparkContext.parallelize(docs).toDS()).toDF()
-    ).foreach { case (input, df) =>
-      // regression guard for the 60GB-row-copy bug: if the envelope scalar
-      // is projected above the generate, Catalyst pulls the raw multi-MB
-      // response string into requiredChildOutput — duplicated into every
-      // exploded state row
-      val gens = df.queryExecution.executedPlan.collect { case g: GenerateExec => g }
-      assert(gens.nonEmpty, s"$input: expected a GenerateExec in the parse plan")
-      gens.foreach { g =>
-        assert(!g.requiredChildOutput.exists(_.name == "value"),
-          s"$input: raw JSON string rides every exploded row: ${g.requiredChildOutput}")
-        assert(g.requiredChildOutput.forall { a =>
-          import org.apache.spark.sql.types._
-          !a.dataType.isInstanceOf[ArrayType] &&
-            !a.dataType.isInstanceOf[StructType] && a.dataType != StringType
-        }, s"$input: wide column carried through the explode: ${g.requiredChildOutput}")
-      }
-      if (input == "rdd") {
-        // each document is decoded once: an inferred filter on the
-        // exploded array must not re-derive it from a second from_json
-        val plan = df.queryExecution.optimizedPlan
-        val parses = plan.flatMap(_.expressions.flatMap(_.collect {
-          case j: JsonToStructs if j.child.references.exists(_.name == "value") => j
-        }))
-        assert(parses.size === 1, s"$input: ${parses.size} from_json(value) in\n$plan")
-      }
-    }
+    def parses(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case j: JsonToStructs => j
+      }))
+    // PollingIngest's tick: the body is decoded on the driver into a
+    // LocalRelation, so planning has no parse to fold or run
+    val local = OpenSky.parseJson(spark, docs).toDF()
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      local.queryExecution.optimizedPlan.toString)
+    assert(parses(local).isEmpty)
+    assert(local.queryExecution.executedPlan.collect { case g: GenerateExec => g }.isEmpty)
+    assert(local.count() === 5L)
+    // the stream source and DSv2 hand it an RDD-backed frame: one decoder
+    // pass per partition, which no optimizer rule can duplicate or split
+    val rdd = OpenSky.parseBatch(spark, spark.sparkContext.parallelize(docs).toDS()).toDF()
+    val plan = rdd.queryExecution.optimizedPlan
+    assert(plan.collect { case m: MapPartitions => m }.size === 1, plan.toString)
+    assert(plan.collect { case g: Generate => g }.isEmpty, plan.toString)
+    assert(parses(rdd).isEmpty, plan.toString)
+    assert(rdd.count() === 5L)
   }
 
   test("q02: filters and projection are pushed into the parquet scan") {

@@ -12,7 +12,7 @@ import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 
 /** A14 registry contract + effectively-once batch replay. */
-class RegistryAndIdempotenceSpec extends AnyFunSuite {
+class RegistryAndIdempotenceSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("registry resolves by name; unknown names fail fast") {
@@ -37,7 +37,7 @@ class RegistryAndIdempotenceSpec extends AnyFunSuite {
   }
 
   test("idempotent sink: replayed batch replaces instead of duplicating") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idem").toString
+    val root = tempDir("graft_idem")
     val sink = new IdempotentParquetSink(root)
     val df = OpenSky.parseJson(spark, Seq(OpenSky.sampleResponse(10))).toDF()
     val targets = Seq(("db1", "flights"))
@@ -65,14 +65,17 @@ class RegistryAndIdempotenceSpec extends AnyFunSuite {
     }
 
   test("encode once: 8 targets hold equal rows from 1 parquet write job") {
-    val root = Files.createTempDirectory("graft_once").toString
+    val root = tempDir("graft_once")
     val sink = new IdempotentParquetSink(root)
     val df = tick(50, 1700000000L)
     val expected = rowsOf(df)
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     val rec = Profile.record(spark)(Fanout.writeBatch(df, eight, sink, batchId = 7))
     assert(rec.result === ((8, 50L)))
-    val writes = rec.jobs.map(_.callSite).filter(_.startsWith("parquet at"))
-    assert(writes.size === 1, s"jobs: ${rec.jobs.map(_.callSite)}")
+    // a decoded tick is local: no persist or count, the write is the only job
+    assert(rec.jobs.size === 1, s"jobs: ${rec.jobs.map(_.callSite)}")
+    assert(rec.jobs.head.callSite.startsWith("parquet at"), rec.jobs.head.callSite)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached)
     eight.foreach { t =>
       assert(batchOf(root, t, 7) === expected, s"$t")
       assert(new File(s"$root/${t._1}/${t._2}/batch=7/_SUCCESS").isFile, s"$t")
@@ -87,7 +90,7 @@ class RegistryAndIdempotenceSpec extends AnyFunSuite {
   }
 
   test("encode once: a target listed twice, or re-sent its removed batch, holds it") {
-    val root = Files.createTempDirectory("graft_twice").toString
+    val root = tempDir("graft_twice")
     val sink = new IdempotentParquetSink(root)
     val targets = Seq(("a", "t"), ("b", "t"), ("a", "t"), ("b", "t"))
     val frames = (1L to 3L).map { id =>
@@ -121,7 +124,7 @@ class RegistryAndIdempotenceSpec extends AnyFunSuite {
   test("encode once: a target that cannot be written fails alone, whichever encodes") {
     val bad = eight(1)
     Seq(None, Some(bad), Some(eight.head)).foreach { lead =>
-      val root = Files.createTempDirectory("graft_bad").toString
+      val root = tempDir("graft_bad")
       Files.createDirectories(new File(s"$root/${bad._1}").toPath)
       Files.write(new File(s"$root/${bad._1}/${bad._2}").toPath, Array[Byte](1))
       val sink = new IdempotentParquetSink(root)

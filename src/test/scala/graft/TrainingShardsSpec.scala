@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to the global shuffle order, byte-level determinism across reruns, and
   * agreement with q125's audited shard assignment (same seed, same
   * kernel — the write path and the audit query must never drift apart). */
-class TrainingShardsSpec extends AnyFunSuite {
+class TrainingShardsSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("shard write: balanced, deterministic, file-order = shuffle order, matches q125's audit") {
@@ -15,7 +15,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
       .select($"doc_id", $"lang", $"n_chars")
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_shards1").toString
+    val dir1 = tempDir("graft_shards1")
     val audit = TrainingShards.write(docs, dir1, "seed42", 8)
 
     assert(audit.map(_._1).toSeq === (0 until 8), "every shard dir must exist")
@@ -42,7 +42,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     }
 
     // reruns reproduce the identical document→shard→position mapping
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_shards2").toString
+    val dir2 = tempDir("graft_shards2")
     TrainingShards.write(docs, dir2, "seed42", 8)
     def content(d: String) = spark.read.parquet(d)
       .select($"doc_id", $"rk", $"shard_id").collect()
@@ -54,7 +54,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents").select($"doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards3").toString
+    val dir = tempDir("graft_shards3")
     TrainingShards.write(docs, dir, "seed42", 4, maxRecordsPerFile = 20L)
     (0 until 4).foreach { k =>
       val files = new java.io.File(s"$dir/shard_id=$k").listFiles()
@@ -142,8 +142,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import spark.implicits._
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_spec").toString
+    val root = tempDir("graft_snap_spec")
     def keys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.select($"doc_id").as[Long].collect().toSeq.sorted
     val v1Keys = keys(o.filter($"doc_id" % 10 < 7))
@@ -198,8 +197,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import spark.implicits._
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_race").toString
+    val root = tempDir("graft_snap_race")
     def keys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.select($"doc_id").as[Long].collect().toSeq.sorted
     val aIn = o.filter($"doc_id" % 2 === 0)
@@ -232,8 +230,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import spark.implicits._
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_storm").toString
+    val root = tempDir("graft_snap_storm")
     val n = 8
     val gate = new java.util.concurrent.CountDownLatch(n)
     val hook: () => Unit = () => {
@@ -265,8 +262,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import spark.implicits._
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_expire").toString
+    val root = tempDir("graft_snap_expire")
     def keys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.select($"doc_id").as[Long].collect().toSeq.sorted
     (0 to 3).foreach { r =>
@@ -302,8 +298,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_merge").toString
+    val root = tempDir("graft_snap_merge")
     val v1 = TrainingShards.writeVersion(o, root, "s", 2)
     val n1 = o.count()
     val mx = o.agg(max($"doc_id")).head().getLong(0)
@@ -336,8 +331,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", $"cents").collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft_snap_merge2").toString
+    val root2 = tempDir("graft_snap_merge2")
     TrainingShards.writeVersion(o, root2, "s", 2)
     val v2b = TrainingShards.mergeVersion(spark, root2, changes,
       "doc_id", "s", 2, broadcastKeyLimit = 0L)
@@ -353,8 +347,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import spark.implicits._
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_bloom_spec").toString
+    val root = tempDir("graft_bloom_spec")
     o.filter($"doc_id" % 3 =!= 0).coalesce(2)
       .write.mode("overwrite").parquet(s"$root/d/batch=base")
     val store = s"$root/bloom"
@@ -396,8 +389,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"),
         $"o_orderpriority".as("prio"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_evo").toString
+    val root = tempDir("graft_snap_evo")
     TrainingShards.writeVersion(
       o.filter($"doc_id" % 2 === 0).select($"doc_id"), root, "s", 2)
     TrainingShards.writeVersion(
@@ -422,8 +414,7 @@ class TrainingShardsSpec extends AnyFunSuite {
     import spark.implicits._
     val o = Tables.t(spark, sfDir, "orders")
       .select($"o_orderkey".as("doc_id"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_batch").toString
+    val root = tempDir("graft_snap_batch")
     val a = TrainingShards.writeVersion(
       o.filter($"doc_id" % 2 === 0), root, "s", 2,
       batchId = Some("b0"))
