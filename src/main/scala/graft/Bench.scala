@@ -1,376 +1,167 @@
 package graft
 
-/** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line with per-query wall seconds (driver contract). */
+import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
+
+/** Benchmark main: runs the declared queries on `SPARK_GRAFT_SF_DIR` and
+  * prints ONE compact JSON line with per-query wall seconds as its last
+  * stdout line, after a `GRAFT_BENCH_JSON_FULL` line with every measurement.
+  *
+  * One measurement rule for every query: a cold run, then a warm run, and
+  * the reported number is their minimum (run 1 pays one-off driver costs —
+  * file listing, codegen compile — so the min tracks the steady state). No
+  * query is ever re-run. Each run records its wall, process-CPU and
+  * host-steal seconds, and whether the window was contended is read from
+  * those alone: the bench reads nothing but its inputs. */
 object Bench {
+
+  /** Largest share of the timed runs' capacity (wall seconds × cores) the
+    * hypervisor may steal before the run reports `noisy`. Steal is time a
+    * runnable vCPU waited for the host, so at 5% of capacity a CPU-bound
+    * query's wall inflates by about 5% — half the 10% change a before/after
+    * comparison of this bench is expected to resolve. A run above it cannot
+    * back such a claim alone. Fixed, not a knob: each run must meet the
+    * same bar. */
+  val MaxStealShare = 0.05
+
+  /** `/proc/stat` counts USER_HZ ticks: 100 per second on Linux. */
+  private val UserHz = 100.0
+
+  /** One timed run: wall, process CPU (driver and executor threads alike,
+    * since local mode runs both in this JVM) and host steal seconds, and
+    * the error when the query threw. */
+  final case class Run(wallSec: Double, cpuSec: Double, stealSec: Double,
+      error: Option[String])
+
+  /** A query's two runs; it failed when either threw. */
+  final case class Timed(name: String, runs: Seq[Run]) {
+    def failed: Boolean = runs.exists(_.error.isDefined)
+    def best: Double = runs.map(_.wallSec).min
+  }
+
+  final case class Result(sfDir: String, master: String,
+      defaultParallelism: Int, cores: Int, queries: Seq[Timed]) {
+    val failed: Seq[String] = queries.filter(_.failed).map(_.name)
+    val scored: Seq[(String, Double)] =
+      queries.filterNot(_.failed).map(t => t.name -> t.best)
+    val total: Double = scored.map(_._2).sum
+    private val runs = queries.flatMap(_.runs)
+    val wallSec: Double = runs.map(_.wallSec).sum
+    val stealSec: Double = runs.map(_.stealSec).sum
+    val noisy: Boolean = stealSec > MaxStealShare * wallSec * cores
+
+    private def head(qs: Seq[(String, Double)]): String = {
+      val m = qs.map { case (k, v) => jstr(k) + f":$v%.3f" }
+        .mkString("{", ",", "}")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","master":${jstr(master)},"default_parallelism":$defaultParallelism,"queries":$m"""
+    }
+
+    /** Every query's min, both runs' wall, CPU and steal seconds, and the
+      * run totals that `noisy` is read from. */
+    def fullJson: String = {
+      def col(t: Timed, f: Run => Double) =
+        t.runs.map(r => f"${f(r)}%.3f").mkString("[", ",", "]")
+      val perRun = queries.map(t => jstr(t.name) +
+        s""":{"wall":${col(t, _.wallSec)},"cpu":${col(t, _.cpuSec)},"steal":${col(t, _.stealSec)}}""")
+        .mkString("{", ",", "}")
+      head(scored) + s""","failed":${names(failed)},"noisy":$noisy""" +
+        f""","cores":$cores,"wall_sec":$wallSec%.3f,"steal_sec":$stealSec%.3f""" +
+        s""","sf":${jstr(sfDir)},"runs":$perRun}"""
+    }
+
+    /** The final line: the slowest 20 queries and at most 10 failed names,
+      * sized well under 2000 chars so a reader of the log's last 2000
+      * chars always gets the whole line. */
+    def compactJson(out: String): String =
+      head(scored.sortBy(-_._2).take(20)) +
+        s""","failed":${names(failed.take(10))},"n_failed":${failed.size}""" +
+        s""","noisy":$noisy,"sf":${jstr(sfDir)}""" +
+        s""","n_queries":${queries.size},"full":${jstr(out)}}"""
+  }
+
+  /** Host steal seconds so far: the 8th value of `/proc/stat`'s aggregate
+    * `cpu` line, or 0 where the file is unreadable. */
+  def stealSec(stat: Path): Double =
+    try Files.readAllLines(stat).get(0).trim.split("\\s+")(8).toDouble / UserHz
+    catch { case NonFatal(_) => 0.0 }
+
+  private val procStat = Paths.get("/proc/stat")
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  private def once(spark: SparkSession, q: Q, sfDir: String): Run = {
+    // label the jobs so a UI or event-log reader can attribute them
+    spark.sparkContext.setJobDescription(q.name)
+    val (steal0, cpu0, t0) =
+      (stealSec(procStat), os.getProcessCpuTime, System.nanoTime())
+    val error =
+      try { q.run(spark, sfDir).count(); None }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"bench: ${q.name} failed: $e")
+          Some(e.toString)
+      } finally spark.sparkContext.setJobDescription(null)
+    Run((System.nanoTime() - t0) / 1e9, (os.getProcessCpuTime - cpu0) / 1e9,
+      stealSec(procStat) - steal0, error)
+  }
+
+  /** Times every query under the one rule, in order; a fatal error ends
+    * the run. */
+  def run(spark: SparkSession, queries: Seq[Q], sfDir: String): Result = {
+    // Warm the JVM and codegen paths once so per-query numbers measure
+    // the engine, not first-call classloading.
+    SparkEntry.entry(spark).count()
+    val timed = queries.map(q =>
+      Timed(q.name, Seq(once(spark, q, sfDir), once(spark, q, sfDir))))
+    Result(sfDir, spark.sparkContext.master,
+      spark.sparkContext.defaultParallelism,
+      Runtime.getRuntime.availableProcessors, timed)
+  }
+
+  /** Interpolated strings (paths from env, query names) must not be able
+    * to break the JSON lines a log reader parses. */
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  private def names(ns: Seq[String]): String =
+    ns.map(jstr).mkString("[", ",", "]")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.create()
-    // Warm the JVM/codegen paths once so per-query numbers measure the
-    // engine, not first-call classloading.
-    SparkEntry.entry(spark).count()
-    // ---- fixed calibration probe ----------------------------------------
-    // A NEVER-CHANGING constant workload measured in every artifact, so
-    // cross-round host drift (round 10 measured a uniform 1.27-1.45x
-    // slowdown on byte-identical code) becomes arithmetic instead of
-    // forensics: readers — and the detectors below — normalize a previous
-    // round's seconds by (cal_now / cal_prev) before calling anything a
-    // regression. Two components, min-of-2 each like the queries:
-    //   (a) pure engine CPU: 32-way codegen'd hash+agg over a fixed range
-    //       (no IO, no shuffle) — tracks core speed + scheduler overhead;
-    //   (b) fixed parquet scan: a 2M-row 3-column file written UNTIMED to
-    //       scratch, then scan+filter+agg timed — tracks the IO/codec path.
-    // DO NOT change these constants between rounds; the probe's value is
-    // its byte-stability.
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def calibrationOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, 32)
-        .select(xxhash64($"id").as("h"))
-        .agg(max($"h"), count(lit(1))).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calDir = TempRoots.root("bench_cal").resolve("t").toString
-    spark.range(0L, 2000000L, 1L, 32)
-      .select($"id", xxhash64($"id").as("h"),
-        ($"id" % 997).cast("int").as("m"))
-      .write.mode("overwrite").parquet(calDir)
-    def calScanOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.read.parquet(calDir).filter($"m" < 500)
-        .agg(sum($"h" % 1000000L), count(lit(1))).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibrationSec =
-      math.min(calibrationOnce(), calibrationOnce()) +
-        math.min(calScanOnce(), calScanOnce())
-    // Two timed runs per query, report the minimum: run 1 pays one-off
-    // driver costs (file listing, codegen compile); the min reflects
-    // steady-state engine throughput.
-    def once(q: Q): Double = {
-      // guide §1.5: label the jobs so any UI/event-log inspection of a
-      // bench run attributes work to its query (timing unchanged)
-      spark.sparkContext.setJobDescription(q.name)
-      val t0 = System.nanoTime()
-      try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    // local smoke-test aid (the driver never sets it): run only a comma-
-    // separated subset — the artifact's n_queries shrinks accordingly, so
-    // a subset artifact is visibly not a full-corpus record
-    val benchQueries: Seq[Q] = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
+    // local smoke-test aid: run only a comma-separated subset — n_queries
+    // shrinks accordingly, so a subset artifact is visibly not a full record
+    val queries = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(list) =>
         val sel = list.split(",").map(_.trim).toSet
         SparkEntry.allQueries.filter(q => sel.contains(q.name))
       case None => SparkEntry.allQueries
     }
-    val byName = benchQueries.map(q => q.name -> q).toMap
-    def pairOf(q: Q): (Double, Double) = (once(q), once(q))
-    def pairMin(p: (Double, Double)): Double =
-      if (p._1 < 0 || p._2 < 0) -1.0 else math.min(p._1, p._2)
-    // `latest` = the most recent (cold, warm) pair per query — the frame
-    // the warm-slow detector reads; `best` = the min over every pair
-    // measured so far (a noise retry can only improve a query's number,
-    // never inflate it).
-    var latest: Map[String, (Double, Double)] =
-      benchQueries.map(q => q.name -> pairOf(q)).toMap
-    var best: Map[String, Double] = latest.view.mapValues(pairMin).toMap
-    def merge(flagged: Set[String]): Unit = flagged.foreach { n =>
-      val p = pairOf(byName(n))
-      latest += n -> p
-      val m = pairMin(p)
-      best += n -> (if (best(n) < 0) m
-                    else if (m < 0) best(n)
-                    else math.min(best(n), m))
-    }
-    var runs = benchQueries.map { q =>
-      (q.name, latest(q.name)._1, latest(q.name)._2) }
-    var results = benchQueries.map(q => q.name -> best(q.name))
-    // ---- noise self-diagnosis -------------------------------------------
-    // min-of-2 absorbs one-off costs but NOT a contended host: if both runs
-    // land in a busy window every number inflates and a reader sees a fake
-    // regression (BENCH_r05 recorded 50.07 s for code whose quiet-window
-    // rerun measured 39.26 s). Three detectors make a contended run
-    // self-announcing rather than silently trusted:
-    //  1. within-run — the SECOND (warm) run much slower than the first
-    //     cold one (b > 2a, gap > 0.25 s): warm-up asymmetry only ever
-    //     inflates run 1, so a slow run 2 means external interference.
-    //     (A plain max/min spread misfires on normal warm-up and would
-    //     ALSO have missed r05, where both runs sat in the same window.)
-    //     Requires >= 2 tripping queries to taint the artifact: with
-    //     193 x 2 measurements a SINGLE warm-slow query is almost always
-    //     a transient JVM pause (measured: one codec query's warm run at
-    //     7.5 s vs 0.72 s cold in an otherwise load-0.1 window, a
-    //     different single query each run), the min-of-2 already absorbs
-    //     it, and flagging it serially blocked every otherwise-clean
-    //     artifact. Two or more queries stalling is window-level
-    //     interference — that still flags. A single trip prints an
-    //     informational marker instead.
-    //  2. cross-round — >= 3 of the previous committed round's slowest
-    //     queries (its parsed map) running > 2x SLOWER here with a
-    //     > 0.25 s gap: the r05 signature exactly (q70/q71/q72/q101/q108
-    //     all inflated 2-5x while the code was byte-identical). The
-    //     opposite direction — this run much FASTER than history — means
-    //     the HISTORY was the contended window; that prints an
-    //     informational PREV_SUSPECT marker without tainting this run.
-    //  3. total drift: > 25% above the previous committed total → this
-    //     run suspect; > 25% below → history suspect (informational).
-    // Previous round = the newest BENCH_r*.json in the working directory
-    // (where the driver runs sbt); all three are best-effort.
-    def newestArtifact(prefix: String): Option[java.nio.file.Path] =
-      try {
-        val cwd = java.nio.file.Paths.get(".")
-        val ls = java.nio.file.Files.list(cwd)
-        try {
-          import scala.jdk.CollectionConverters._
-          ls.iterator().asScala.map(_.getFileName.toString)
-            .filter(f => f.startsWith(prefix) && f.endsWith(".json"))
-            .toSeq.sorted.lastOption.map(cwd.resolve)
-        } finally ls.close()
-      } catch { case _: Exception => None }
-    // Parse (total, per-query map, calibration_sec) out of an artifact's
-    // compact-line region. `from` anchors past the driver's wrapper for
-    // BENCH_r* files ("parsed": {...}); quiet artifacts are the raw line.
-    def parseArtifact(p: java.nio.file.Path, anchor: String)
-        : Option[(Double, Map[String, Double], Option[Double])] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val at = if (anchor.isEmpty) 0 else txt.indexOf(anchor)
-        if (at < 0) None
-        else {
-          val sub = txt.substring(at)
-          val t = """"value"\s*:\s*([0-9.]+)""".r
-            .findFirstMatchIn(sub).map(_.group(1).toDouble)
-          val qs = """"queries"\s*:\s*\{([^}]*)\}""".r
-            .findFirstMatchIn(sub).map(_.group(1)) match {
-            case Some(body) =>
-              """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(body)
-                .map(m => m.group(1) -> m.group(2).toDouble).toMap
-            case None => Map.empty[String, Double]
-          }
-          val cal = """"calibration_sec"\s*:\s*([0-9.]+)""".r
-            .findFirstMatchIn(sub).map(_.group(1).toDouble)
-          t.map(v => (v, qs, cal))
-        }
-      } catch { case _: Exception => None }
-    // Host-drift normalization: when BOTH this run and the artifact being
-    // compared against carry the fixed calibration probe, scale the
-    // artifact's seconds by (cal_now / cal_then) before any comparison —
-    // a uniformly slower host then stops reading as a fleet of 1.3x "re-
-    // gressions". Clamped to [0.4, 4]: a ratio outside that band means the
-    // probe itself hit a transient and normalizing by it would lie harder
-    // than not normalizing.
-    def calRatio(thenCal: Option[Double]): Double = thenCal match {
-      case Some(c) if c > 0 =>
-        math.max(0.4, math.min(4.0, calibrationSec / c))
-      case _ => 1.0
-    }
-    val prevParsed = newestArtifact("BENCH_r")
-      .flatMap(parseArtifact(_, "\"parsed\""))
-    val prevRatio = calRatio(prevParsed.flatMap(_._3))
-    val prev: Option[(Double, Map[String, Double])] =
-      prevParsed.map { case (t, qs, _) =>
-        (t * prevRatio, qs.view.mapValues(_ * prevRatio).toMap) }
-    val prevQs = prev.map(_._2).getOrElse(Map.empty).toSeq
-    def deviates(v: Double, p: Double): Boolean =
-      v >= 0 && p > 0 && v > 2 * p && v - p > 0.25
-    final case class Diag(noisyQueries: Seq[String], crossSlow: Seq[String],
-        crossFast: Seq[String], prevOverlapTotal: Double,
-        curOverlapTotal: Double, drifted: Option[Double],
-        prevSuspect: Boolean, noisy: Boolean)
-    def diagnose(): Diag = {
-      val mins = results.toMap
-      val noisyQueries = runs.collect {
-        case (n, a, b) if a >= 0 && b > 2 * a && b - a > 0.25 => n
-      }
-      val crossSlow = prevQs.collect {
-        case (n, p) if mins.get(n).exists(v => deviates(v, p)) => n }.sorted
-      val crossFast = prevQs.collect {
-        case (n, p) if mins.get(n).exists(v => deviates(p, v)) => n }.sorted
-      // Drift totals compare the OVERLAPPING query set only — the corpus
-      // grows every round (round 7 alone added 30 queries), and raw totals
-      // would trip the guard on growth, not contention. The prev artifact
-      // carries its top-20 map; those heavy queries are exactly the
-      // drift-sensitive subset.
-      val overlap = prevQs.filter { case (n, p) =>
-        p > 0 && mins.get(n).exists(_ >= 0) }
-      val prevOverlapTotal = overlap.map(_._2).sum
-      val curOverlapTotal = overlap.map { case (n, _) => mins(n) }.sum
-      val drifted = prev.map(_ => prevOverlapTotal)
-        .filter(p => p > 0 && curOverlapTotal > 1.25 * p)
-      val prevSuspect = prev.map(_ => prevOverlapTotal)
-        .filter(p => p > 0 && curOverlapTotal < 0.75 * p).isDefined ||
-        crossFast.size >= 3
-      Diag(noisyQueries, crossSlow, crossFast, prevOverlapTotal,
-        curOverlapTotal, drifted, prevSuspect,
-        noisy = noisyQueries.size >= 2 || crossSlow.size >= 3 ||
-          drifted.isDefined)
-    }
-    var d = diagnose()
-    // ---- retry-on-noise ------------------------------------------------
-    // A tripped detector means the numbers for the FLAGGED queries are
-    // untrustworthy, not the code: BENCH_r07 and BENCH_r09 both recorded
-    // contended windows the quiet-window rerun refuted, and the driver
-    // artifact is what the next judge reads first. So before writing a
-    // tainted artifact, re-measure exactly the flagged subset (two fresh
-    // runs each — minutes, not the full corpus) and re-diagnose; `best`
-    // keeps the min across every pair so a retry can only improve a
-    // number. If the retry ALSO trips, the window really is contended and
-    // the noisy flag stands.
-    val retried: Set[String] =
-      if (!d.noisy) Set.empty
-      else {
-        val flagged = (d.noisyQueries.toSet ++
-          (if (d.crossSlow.size >= 3) d.crossSlow.toSet else Set.empty) ++
-          d.drifted.map(_ => prevQs.map(_._1).toSet).getOrElse(Set.empty))
-          .filter(byName.contains)
-        merge(flagged)
-        runs = benchQueries.map { q =>
-          (q.name, latest(q.name)._1, latest(q.name)._2) }
-        results = benchQueries.map(q => q.name -> best(q.name))
-        d = diagnose()
-        flagged
-      }
-    // ---- quiet-artifact cross-check --------------------------------------
-    // BENCH_r10's top-20 carried 29-51x contended numbers under a
-    // noisy:false flag (q175: 19.2 s driver vs 0.67 s quiet) — symmetric
-    // contention defeats the warm-slow detector because BOTH runs of the
-    // pair inflate together. The committed quiet-window artifact
-    // (BENCH_QUIET_r*.json, measured from an idle window each round) is
-    // the per-query record of truth, so: every would-be top-20 entry
-    // measuring > 3x its calibration-normalized quiet twin gets ONE fresh
-    // re-measure; anything still divergent after that is named in the
-    // artifact under "quiet_divergent" — a top-20 number is now either
-    // within ~3x of its quiet twin or explicitly flagged, never silently
-    // trusted.
-    val quietParsed = newestArtifact("BENCH_QUIET_r")
-      .flatMap(parseArtifact(_, ""))
-    val quietRatio = calRatio(quietParsed.flatMap(_._3))
-    val quietQs: Map[String, Double] = quietParsed
-      .map(_._2.view.mapValues(_ * quietRatio).toMap).getOrElse(Map.empty)
-    def quietDivergentNow(): Seq[String] =
-      results.filter(_._2 >= 0).sortBy(-_._2).take(20).collect {
-        case (n, v) if quietQs.get(n).exists(qv =>
-          qv > 0 && v > 3 * qv && v - qv > 0.3) => n
-      }
-    val quietRetried: Seq[String] = {
-      val flagged = quietDivergentNow().filter(byName.contains)
-      if (flagged.nonEmpty) {
-        merge(flagged.toSet)
-        runs = benchQueries.map { q =>
-          (q.name, latest(q.name)._1, latest(q.name)._2) }
-        results = benchQueries.map(q => q.name -> best(q.name))
-        d = diagnose()
-      }
-      flagged
-    }
-    val quietDivergent = quietDivergentNow()
-    val noisyQueries = d.noisyQueries
-    val crossSlow = d.crossSlow
-    val crossFast = d.crossFast
-    val prevOverlapTotal = d.prevOverlapTotal
-    val curOverlapTotal = d.curOverlapTotal
-    val drifted = d.drifted
-    val prevSuspect = d.prevSuspect
-    val noisy = d.noisy
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // ---------------------------------------------------------------------
-    // Interpolated strings (paths from env, query names) must not be able
-    // to break the one JSON line the driver parses.
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    // NOTE: `total` is deliberately corpus-wide (computed from `results`,
-    // not the `rs` slice) — the compact summary line reports the full
-    // run's total next to only the slowest queries.
-    // The line also records the EFFECTIVE parallelism (the resolved
-    // master string and the context's defaultParallelism): the r15
-    // scaling block could not adjudicate "does the bench honor
-    // $SPARK_GRAFT_CPUS" from the artifact alone — now every artifact
-    // carries the value the session actually ran with.
-    val master = spark.sparkContext.master
-    val defaultPar = spark.sparkContext.defaultParallelism
-    def toJson(rs: Seq[(String, Double)], extra: String = ""): String = {
-      val qs = rs.map { case (k, v) => jstr(k) + f""":$v%.3f""" }
-        .mkString("{", ",", "}")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","calibration_sec":$calibrationSec%.3f,"master":${jstr(master)},"default_parallelism":$defaultPar,"queries":$qs$extra,"noisy":$noisy,"sf":${jstr(sfDir)}}"""
-    }
-    // full JSON carries both raw runs per query so a reader can audit the
-    // spread behind any reported min
-    val spread = runs.map { case (n, a, b) => jstr(n) + f""":[$a%.3f,$b%.3f]""" }
-      .mkString("{", ",", "}")
-    val retriedAll = retried ++ quietRetried
-    val retriedJson =
-      if (retriedAll.isEmpty) ""
-      else s""","retried":${retriedAll.toSeq.sorted.map(jstr).mkString("[", ",", "]")}"""
-    val quietJson =
-      if (quietDivergent.isEmpty) ""
-      else s""","quiet_divergent":${quietDivergent.sorted.map(jstr).mkString("[", ",", "]")}"""
-    val full = toJson(results, s""","runs":$spread$retriedJson$quietJson""")
-    // The driver captures only the LAST ~2000 chars of the sbt log; the
-    // full 100+-query map is ~3 KB, so a single fat line gets its head
-    // truncated and never parses (BENCH_r01/r02 both had parsed:null).
-    // Full map goes to a file + an early marker line; the FINAL stdout
-    // line is a compact summary (total + the slowest queries) sized well
-    // under the tail buffer so the driver always sees one complete JSON.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      // the printed lines are the primary contract; a bad BENCH_OUT path
-      // must not fail a completed benchmark run
-      case e: java.io.IOException =>
-        System.err.println(s"bench: could not write $out: ${e.getMessage}")
-    }
-    println(s"GRAFT_BENCH_JSON_FULL $full")
-    if (quietRetried.nonEmpty)
-      println(s"GRAFT_BENCH_QUIET_CHECK ${quietRetried.size} top-20 " +
-        "entries measured >3x their quiet-artifact twin and were " +
-        "re-measured" +
-        (if (quietDivergent.nonEmpty)
-          s" — STILL divergent: ${quietDivergent.mkString(",")}; the " +
-            "published numbers are the measured ones, flagged in " +
-            "\"quiet_divergent\""
-         else " — re-measure brought all within band"))
-    if (retried.nonEmpty)
-      println(s"GRAFT_BENCH_RETRIED ${retried.size} flagged queries " +
-        s"re-measured after a tripped noise detector" +
-        (if (noisy) " — STILL noisy; the window is genuinely contended"
-         else " — retry cleared the flag"))
-    if (prevSuspect)
-      println("GRAFT_BENCH_PREV_SUSPECT this run is substantially FASTER " +
-        "than the previous committed round on identical code paths — the " +
-        s"previous artifact likely recorded a contended window" +
-        (if (crossFast.nonEmpty) s" (${crossFast.mkString(",")})" else ""))
-    if (!noisy && noisyQueries.size == 1)
-      // one absorbed transient (min-of-2 reported) — visible, not tainting
-      println(s"GRAFT_BENCH_WARM_OUTLIER warm_run_slow:${noisyQueries.head} " +
-        "— single-query transient absorbed by min-of-2; artifact not flagged")
-    if (noisy) {
-      // loud, greppable, and BEFORE the final compact line — a contended
-      // window must not masquerade as a code regression
-      val why = (noisyQueries.map(n => s"warm_run_slow:$n") ++
-        (if (crossSlow.size >= 3)
-          Seq(s"cross_round_2x:${crossSlow.mkString("+")}") else Nil) ++
-        // the drift guard compares the overlap-only totals, so the
-        // message must print THOSE — the corpus-wide total overstates
-        // drift whenever the corpus grew since the prev artifact
-        drifted.map(p =>
-          f"overlap_drift:${curOverlapTotal}%.1fs_vs_prev_${p}%.1fs"))
-        .mkString(",")
-      println(s"GRAFT_BENCH_NOISY $why — rerun in a quiet window before " +
-        "comparing against previous rounds")
-    }
-    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-    println(toJson(slowest,
-      s""","n_queries":${results.size},"full":${jstr(out)}$quietJson"""))
-    spark.stop()
+    val spark = GraftSession.create()
+    try {
+      val result = run(spark, queries, sfDir)
+      val full = result.fullJson
+      // The full record runs to tens of KB, so it goes to a file and an
+      // early marker line; the final stdout line is the compact summary.
+      try Files.write(Paths.get(out), (full + "\n").getBytes(UTF_8))
+      catch {
+        // the printed lines are the primary contract; a bad BENCH_OUT path
+        // must not fail a completed benchmark run
+        case e: java.io.IOException =>
+          System.err.println(s"bench: could not write $out: ${e.getMessage}")
+      }
+      println(s"GRAFT_BENCH_JSON_FULL $full")
+      println(result.compactJson(out))
+    } finally spark.stop()
   }
 }

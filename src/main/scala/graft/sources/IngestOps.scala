@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Q, QueryModule}
+import graft.{Q, QueryModule, TempRoots}
 import org.apache.spark.sql.functions._
 
 /** Ingest-pipeline corpus entries (SURVEY §2A capability surface as
@@ -45,7 +45,10 @@ object IngestOps extends QueryModule {
         import graft.sink.ParquetSink
         import graft.streaming.{PollingIngest, SyntheticOpenSkySource}
         import s.implicits._
-        val root = java.nio.file.Files.createTempDirectory("graft_fanout").toString
+        // a new dir per run keeps an earlier run's lazy result readable;
+        // TempRoots deletes the lot at JVM exit
+        val root = java.nio.file.Files.createTempDirectory(
+          TempRoots.root("graft_fanout"), "q81").toString
         val cfg = IngestConfig(
           plugin = PluginSpec(intervalSec = 1),
           databases = DatabasesConfig(prefix = "auto_", copies = 3, extra = Map("foo" -> 2)),

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Q, QueryModule, Tables, TempRoots}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,9 +18,15 @@ object SourceFormats extends QueryModule {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
+  /** A new dir per run, so an earlier run's lazy result stays readable;
+    * TempRoots deletes the lot at JVM exit. */
+  private def scratch(fmt: String): String =
+    java.nio.file.Files.createTempDirectory(TempRoots.root(s"graft_$fmt"), fmt)
+      .toString
+
   private def roundTrip(fmt: String)(s: org.apache.spark.sql.SparkSession, dir: String) = {
     import s.implicits._
-    val path = java.nio.file.Files.createTempDirectory(s"graft_$fmt").toString + "/events"
+    val path = scratch(fmt) + "/events"
     Tables.t(s, dir, "events")
       .select($"event_id", $"user_id", $"event_type", $"value")
       .write.format(fmt).option("header", "true").mode("overwrite").save(path)
@@ -60,8 +66,7 @@ object SourceFormats extends QueryModule {
         "and oracle as the other format round-trips.",
       (s, dir) => {
         import s.implicits._
-        val path =
-          java.nio.file.Files.createTempDirectory("graft_xml").toString + "/events"
+        val path = scratch("xml") + "/events"
         Tables.t(s, dir, "events")
           .select($"event_id", $"user_id", $"event_type", $"value")
           .write.format("xml").option("rowTag", "event").mode("overwrite").save(path)

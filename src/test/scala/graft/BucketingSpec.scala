@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Exchange (at 100 TB that shuffle is the dominant cost; bucketed layout
   * pays it once at write time instead of per query).
   */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("bucketed fact-fact join runs with zero exchanges") {
@@ -67,8 +67,7 @@ class BucketingSpec extends AnyFunSuite {
       val o = Tables.t(spark, sfDir, "orders")
         .select($"o_orderkey".as("doc_id"),
           expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_diff_bucket").toString
+      val root = tempDir("graft_diff_bucket")
       val v1 = TrainingShards.writeVersion(o, root, "s", 2)
       val mx = o.agg(max($"doc_id")).head().getLong(0)
       val v2 = TrainingShards.mergeVersion(spark, root,

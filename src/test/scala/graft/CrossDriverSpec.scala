@@ -14,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * classpath and --add-opens flags; a ready/go marker barrier lines
   * both drivers up before the contended loop, so the probe's
   * SparkSession startup cannot quietly de-contend the test. */
-class CrossDriverSpec extends AnyFunSuite {
+class CrossDriverSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   private def spawnProbe(mode: String, root: String, id: String,
@@ -48,8 +48,7 @@ class CrossDriverSpec extends AnyFunSuite {
 
   test("TWO real JVMs contending the lease: critical sections never " +
     "overlap across processes, and both drivers complete") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_xdrv_lease").toString
+    val root = tempDir("graft_xdrv_lease")
     val iters = 12
     val p = spawnProbe("lease", root, "b", iters, staleMs = 60000L)
     try {
@@ -89,8 +88,7 @@ class CrossDriverSpec extends AnyFunSuite {
 
   test("TWO real JVMs racing one-winner claims: every slot has exactly " +
     "one winner and carries exactly the winner's bytes") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_xdrv_claim").toString
+    val root = tempDir("graft_xdrv_claim")
     val slots = 25
     val p = spawnProbe("claim", root, "b", slots, staleMs = 60000L)
     try {
@@ -132,8 +130,7 @@ class CrossDriverSpec extends AnyFunSuite {
     import graft.sink.CowSnapshots
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_xdrv_merge").toString
+    val root = tempDir("graft_xdrv_merge")
     val store = s"$root/store"
     val baseKeys = (1L to 50L).toSeq
     CowSnapshots.writeVersion(

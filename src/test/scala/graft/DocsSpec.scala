@@ -110,6 +110,12 @@ class DocsSpec extends AnyFunSuite {
     assert((knobs -- envReads).isEmpty,
       s"README names env knobs no sys.env read in src/main/scala takes: " +
         s"${(knobs -- envReads).toSeq.sorted.mkString(", ")}")
+    val marker = raw"\bGRAFT_BENCH_[A-Z_]+".r
+    val deadMarkers =
+      marker.findAllIn(readme).toSet -- marker.findAllIn(mainSrc).toSet
+    assert(deadMarkers.isEmpty,
+      s"README names bench output markers no code in src/main/scala prints: " +
+        s"${deadMarkers.toSeq.sorted.mkString(", ")}")
     val tools = raw"graft\.tools\.([A-Z]\w*)".r.findAllMatchIn(readme)
       .map(_.group(1)).toSet
     val dead = tools.filter(t =>

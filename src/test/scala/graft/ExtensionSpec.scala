@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit coverage for the extension operators that have no SQL oracle:
   * native hash expressions, SimHash semantics, LSH recall. */
-class ExtensionSpec extends AnyFunSuite {
+class ExtensionSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   private def rh(s: String) = TextHash.rollingHash(UTF8String.fromString(s))
@@ -160,7 +160,7 @@ class ExtensionSpec extends AnyFunSuite {
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "srcA") } ++
         texts.zipWithIndex.map { case (t, i) => (i + 100L, t, "srcB") } ++
         (0 until 50).map(i => (i + 200L, s"zulu yankee xray whiskey victor other$i uniform tango sierra", "srcC"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_banded_src").toString
+    val dir = tempDir("graft_banded_src")
     docs.toDF("doc_id", "text", "source").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val banded = graft.operators.Dedup.bandedSourcePairs(spark, dir, minEst = 0.5)
@@ -215,7 +215,7 @@ class ExtensionSpec extends AnyFunSuite {
     def text(from: Int): String = (from until from + 50).map(i => s"w$i").mkString(" ")
     val docs = Seq((0L, text(1), "s"), (1L, text(6), "s"), (2L, text(11), "s"),
       (3L, (200 to 249).map(i => s"z$i").mkString(" "), "s")) // unrelated loner
-    val dir = java.nio.file.Files.createTempDirectory("graft_chain").toString
+    val dir = tempDir("graft_chain")
     docs.toDF("doc_id", "text", "source").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val pairs = graft.operators.Dedup.minhashLshPairs(spark, dir, 0.8)
@@ -239,7 +239,7 @@ class ExtensionSpec extends AnyFunSuite {
       graft.operators.Dedup.neardupClusters(spark, sfDir, 0.8, reliable = true)
     }
     assert(e.getMessage.contains("setCheckpointDir"))
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck")
+    val ckDir = java.nio.file.Paths.get(tempDir("graft_ck"))
     try {
       spark.sparkContext.setCheckpointDir(ckDir.toString)
       val local = graft.operators.Dedup.neardupClusters(spark, sfDir, 0.8)
@@ -254,17 +254,9 @@ class ExtensionSpec extends AnyFunSuite {
       assert(wrote > 0, "reliable mode must materialize to the checkpoint dir")
     } finally {
       // the session is JVM-shared across suites: restore the no-dir state
-      // (setCheckpointDir(null) → Option(null) → None) and remove the temp
-      // dir so suite ordering and same-JVM reruns stay hermetic. The
-      // returned frames were fully collected above — no live RDD still
-      // reads these checkpoint files.
+      // (setCheckpointDir(null) → Option(null) → None) so suite ordering
+      // stays hermetic; TempDirs removes the dir after the suite
       spark.sparkContext.setCheckpointDir(null)
-      val walk = java.nio.file.Files.walk(ckDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } finally walk.close()
     }
   }
 
@@ -278,7 +270,7 @@ class ExtensionSpec extends AnyFunSuite {
       graft.operators.AnalyticsPatterns.pagerankInt(spark, sfDir, 3, reliable = true)
     }
     assert(e.getMessage.contains("setCheckpointDir"))
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck_pr")
+    val ckDir = java.nio.file.Paths.get(tempDir("graft_ck_pr"))
     try {
       spark.sparkContext.setCheckpointDir(ckDir.toString)
       // 3 iterations (not q150's 2): exercises the per-iteration snap in
@@ -294,15 +286,7 @@ class ExtensionSpec extends AnyFunSuite {
       val wrote = try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
       finally walk.close()
       assert(wrote > 0, "reliable mode must materialize to the checkpoint dir")
-    } finally {
-      spark.sparkContext.setCheckpointDir(null)
-      val walk = java.nio.file.Files.walk(ckDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } finally walk.close()
-    }
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("neardup clusters equal union-find over the pair graph") {

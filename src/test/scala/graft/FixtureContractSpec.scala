@@ -28,7 +28,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      yields bit-identical frames on either, forever. An encoding the
   *      loader does not recognize must throw, not reinterpret.
   */
-class FixtureContractSpec extends AnyFunSuite {
+class FixtureContractSpec extends AnyFunSuite with TempDirs {
   import TestSession._
   import spark.implicits._
 
@@ -86,7 +86,7 @@ class FixtureContractSpec extends AnyFunSuite {
   }
 
   test("normalizeEventsTs round-trips BOTH encodings to identical frames") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_enc").toString
+    val tmp = tempDir("graft_enc")
     // 10 events across 2024, values chosen so a 1000× scale slip in either
     // direction exits the year and fails the assertions below
     val baseMicros = 1704067200000000L // 2024-01-01T00:00:00 UTC in µs

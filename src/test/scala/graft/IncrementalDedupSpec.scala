@@ -7,15 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * signature index finds EXACTLY the pairs a full-corpus recompute finds
   * among pairs touching a new doc — with history never re-signed and
   * old-old pairs structurally excluded. */
-class IncrementalDedupSpec extends AnyFunSuite {
+class IncrementalDedupSpec extends AnyFunSuite with TempDirs {
   import TestSession._
   import org.apache.spark.sql.functions._
   import spark.implicits._
 
   test("incremental == full recompute restricted to pairs touching the batch (fixtures)") {
     val docs = Tables.t(spark, sfDir, "documents")
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_incr_idx").toString + "/idx"
+    val idxPath = tempDir("graft_incr_idx") + "/idx"
     Dedup.writeSignatureIndex(docs.filter($"doc_id" % 10 =!= 0), idxPath)
     val incr = Dedup.incrementalNeardupPairs(spark, idxPath,
       docs.filter($"doc_id" % 10 === 0), 0.8)
@@ -39,7 +38,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       (20L, text(200)), (30L, text(205)),       // new ~ new
       (40L, (900 to 949).map(i => s"z$i").mkString(" "))) // new loner
       .map { case (id, t) => (id, t, "s") }
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val dir = tempDir("graft_incr")
     docs.toDF("doc_id", "text", "source").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val d = Tables.t(spark, dir, "documents")
@@ -59,7 +58,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // index alone.
     def text(from: Int) = (from until from + 50).map(i => s"w$i").mkString(" ")
     val docs = Seq((3L, text(100), "s"), (10L, text(105), "s"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr2").toString
+    val dir = tempDir("graft_incr2")
     docs.toDF("doc_id", "text", "source").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val d = Tables.t(spark, dir, "documents")

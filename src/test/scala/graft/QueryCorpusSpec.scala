@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSession {
   lazy val spark: SparkSession = {
     val s = GraftSession.builder("4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      // the session outlives every suite, so its warehouse lives in a
+      // pid-scoped root that the JVM deletes at exit
+      .config("spark.sql.warehouse.dir", TempRoots.root("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 225 MiB vs 1.03 GiB for the identical pair set) are cited as
   * optimization evidence — this pins the ratio on a shrunk copy of the
   * same dense-vocab corpus so the advantage cannot silently erode. */
-class ShuffleGateSpec extends AnyFunSuite {
+class ShuffleGateSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("q101 prefix plan shuffles <60% of q62's bytes for the identical exact result") {
@@ -30,7 +30,7 @@ class ShuffleGateSpec extends AnyFunSuite {
       array_join(concat(array(lit("dup")), transform(sequence(lit(1), lit(29)), i =>
         element_at(vocab, ((xxhash64($"id", i) % 30 + 30) % 30 + 1).cast("int")))), " ")
         .as("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_shufgate").toString
+    val dir = tempDir("graft_shufgate")
     base.union(dups).withColumn("source", lit("s"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
@@ -90,7 +90,7 @@ class ShuffleGateSpec extends AnyFunSuite {
     // excerpt 2000+i = tokens 0..19 of container i (same xxhash64($"id", _) draw)
     val excerpts = spark.range(100).select(($"id" + 2000).as("doc_id"),
       array_join(transform(sequence(lit(0), lit(19)), tok), " ").as("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_contgate").toString
+    val dir = tempDir("graft_contgate")
     containers.union(excerpts).withColumn("source", lit("s"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 

@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Full-native streaming ingest end-to-end: DSv2 source → foreachBatch
   * fan-out, several micro-batches, checkpointed. */
-class StreamingIngestSpec extends AnyFunSuite {
+class StreamingIngestSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   test("streaming query fans ticks out to every target") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sing").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sing_ckpt").toString
+    val root = tempDir("graft_sing")
+    val ckpt = tempDir("graft_sing_ckpt")
     val cfg = IngestConfig(
       plugin = PluginSpec(intervalSec = 60),
       databases = DatabasesConfig(prefix = "sdb", copies = 2, extra = Map("y" -> 1)),

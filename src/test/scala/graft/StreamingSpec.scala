@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Multi-batch streaming semantics that single-batch fixture streams can't
   * show: watermark-based late-data dropping and incremental window updates.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   import TestSession._
 
   private def ts(s: String) = Timestamp.valueOf(s)
@@ -189,7 +189,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def text(from: Int) = (from until from + 50).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
+    val dir = tempDir("graft_sdedup")
     val idxRoot = s"$dir/idx"
     val outRoot = s"$dir/pairs"
     // history: doc 1; batch A: doc 10 (~ doc 1); batch B: doc 20 (~ doc 10
