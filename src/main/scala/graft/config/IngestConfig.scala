@@ -1,23 +1,5 @@
 package graft.config
 
-/** Typed ingest configuration, semantics per the reference's config.go.
-  *
-  * Defaults mirror config.go:54-60 (pool 25/25/3600); zero/absent values
-  * fall back to defaults exactly like the reference's reflection-based
-  * ValidateConnectionPool (config.go:69-88) — expressed here as plain
-  * constructor defaults + max, no reflection.
-  */
-final case class PoolConfig(
-    maxOpenConns: Int = 25,
-    maxIdleConns: Int = 25,
-    connMaxLifetimeSec: Int = 3600) {
-  /** Zero-valued fields mean "use default" (config.go:69-88). */
-  def withDefaults: PoolConfig = PoolConfig(
-    if (maxOpenConns <= 0) 25 else maxOpenConns,
-    if (maxIdleConns <= 0) 25 else maxIdleConns,
-    if (connMaxLifetimeSec <= 0) 3600 else connMaxLifetimeSec)
-}
-
 /** tls: section (config.go:34-44 / db_manager.go:60-113): pure
   * pass-through to JDBC/driver properties — channel config, not engine
   * logic (SURVEY §2A A13). */
@@ -40,35 +22,31 @@ final case class TlsConfig(
       (if (clientKeyPath.nonEmpty) Map("clientSslKey" -> clientKeyPath) else Map.empty)
 }
 
-/** databases: section (config.go:14-21 / config.yaml:10-16). */
+/** databases: section (config.go:14-21 / config.yaml:10-16): the fan-out
+  * topology. The reference's `write_workers` (config.yaml:16, never read
+  * there either) is not a field: a batch is decoded on the driver and
+  * written to each target as one partition, so there is no writer
+  * parallelism to cap. */
 final case class DatabasesConfig(
     prefix: String = "auto_",
     copies: Int = 3,
-    extra: Map[String, Int] = Map.empty, // extra name -> #tables (tables_j)
-    /** Honored (unlike in the reference, where config.yaml:16 is never
-      * read and the writer goroutine count is #db×#table): applied in
-      * Fanout.writeBatch as the partition cap during per-target appends,
-      * i.e. the bound on concurrent writer tasks / JDBC connections per
-      * append. The appends to all targets run at once, so a batch has at
-      * most #targets × write_workers writer tasks in flight — the
-      * reference's #db×#table workers, each up to write_workers wide. */
-    writeWorkers: Int = 5)
+    extra: Map[String, Int] = Map.empty) // extra name -> #tables (tables_j)
 
-/** plugin_spec: section (config.go:24-27). */
+/** plugin_spec: section (config.go:24-27). The reference's
+  * `fetch_workers` (config.yaml:8, dead there too: its fetch loop is
+  * single-flight per tick, as the poll here is) is not a field. */
 final case class PluginSpec(
     name: String = "opensky",
-    intervalSec: Int = 60,
-    /** Accepted for config parity, intentionally unused: the reference
-      * never reads its own fetch_workers (config.yaml:8 is dead — the
-      * fetch loop in main.go is single-flight per tick), and the poll
-      * source here is single-flight per tick for the same reason. Parsed
-      * rather than rejected so existing reference configs load unchanged. */
-    fetchWorkers: Int = 1)
+    intervalSec: Int = 60)
 
+/** Typed ingest configuration, semantics per the reference's config.go.
+  * [[IngestConfig.parse]] ignores the keys no field here reads, so
+  * reference configs load unchanged: `write_workers`, `fetch_workers`
+  * and `mysql.connection_pool` (Spark's JDBC writer opens its own
+  * connection per partition, SURVEY §2A A12). */
 final case class IngestConfig(
     plugin: PluginSpec = PluginSpec(),
     databases: DatabasesConfig = DatabasesConfig(),
-    pool: PoolConfig = PoolConfig(),
     tls: TlsConfig = TlsConfig(),
     /** Bounded run (main.go:49-52 hard-codes 60s); <=0 means run forever. */
     runForSec: Int = 60,
@@ -126,11 +104,9 @@ object IngestConfig {
 
     def i(path: String, dflt: Int): Int = kv.get(path).map(_.toInt).getOrElse(dflt)
     def s(path: String, dflt: String): String = kv.getOrElse(path, dflt)
-    // The reference nests connection_pool/tls_config under `mysql:`
-    // (config.go:23-31); accept that canonical location first, with the
-    // flat form as a convenience fallback.
-    def i2(nested: String, flat: String, dflt: Int): Int =
-      kv.get(nested).orElse(kv.get(flat)).map(_.toInt).getOrElse(dflt)
+    // The reference nests tls_config under `mysql:` (config.go:23-31);
+    // accept that canonical location first, with the flat form as a
+    // convenience fallback.
     def s2(nested: String, flat: String, dflt: String): String =
       kv.get(nested).orElse(kv.get(flat)).getOrElse(dflt)
 
@@ -142,20 +118,11 @@ object IngestConfig {
     IngestConfig(
       plugin = PluginSpec(
         name = s("plugin_spec.name", "opensky"),
-        intervalSec = i("plugin_spec.config.interval", 60),
-        fetchWorkers = i("plugin_spec.config.fetch_workers", 1)),
+        intervalSec = i("plugin_spec.config.interval", 60)),
       databases = DatabasesConfig(
         prefix = s("databases.prefix", "auto_"),
         copies = i("databases.copies", 3),
-        extra = extra,
-        writeWorkers = i("databases.write_workers", 5)),
-      pool = PoolConfig(
-        maxOpenConns = i2("mysql.connection_pool.max_open_conns",
-          "connection_pool.max_open_conns", 25),
-        maxIdleConns = i2("mysql.connection_pool.max_idle_conns",
-          "connection_pool.max_idle_conns", 25),
-        connMaxLifetimeSec = i2("mysql.connection_pool.conn_max_lifetime",
-          "connection_pool.conn_max_lifetime", 3600)).withDefaults,
+        extra = extra),
       tls = TlsConfig(
         enabled = kv.get("mysql.tls_config.enabled").orElse(kv.get("tls.enabled"))
           .exists(_.toBoolean),

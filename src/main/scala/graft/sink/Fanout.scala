@@ -10,11 +10,11 @@ import org.slf4j.LoggerFactory
   * The reference fans each batch out to every (db, table) over per-table
   * goroutines with racy channel teardown (main.go:149-155, SURVEY §1.3-4)
   * and row-at-a-time INSERTs inside a broken per-record-commit tx
-  * (main.go:181-210, §1.3-3). Spark-first replacement: materialize the
-  * batch once (a poll tick is decoded on the driver; any other batch is
-  * persisted), then write it to every target at once — one writer thread per
-  * target, all joined before the batch (poll tick / micro-batch) ends —
-  * with batched appends and per-partition parallelism inside each write.
+  * (main.go:181-210, §1.3-3). Spark-first replacement: decode the batch
+  * on the driver once (a poll tick and a streaming micro-batch are both
+  * one document), then write it to every target at once — one writer
+  * thread per target, all joined before the batch (poll tick /
+  * micro-batch) ends — with batched appends inside each write.
   * Delivery is at-least-once per micro-batch (same guarantee class as the
   * reference, better granularity).
   */
@@ -364,15 +364,14 @@ object Fanout {
     * per-table goroutines, main.go:149-155); warn-and-continue per target
     * (the reference's error policy, main.go:198-203).
     *
-    * A driver-local batch (a `LocalRelation`, as `OpenSky.parseJson`
-    * gives a poll tick) is already materialized: its row count comes from
-    * the relation, and every target gets it as one partition — a local
-    * scan would otherwise split it into `defaultParallelism` files per
-    * target. Any other batch is persisted once so its (possibly
-    * expensive) upstream plan runs a single time, not once per target,
-    * and counted before the appends.
+    * The batch is a driver-decoded tick (a `LocalRelation`, as
+    * `OpenSky.parseJson` gives a poll tick and a streaming micro-batch
+    * alike): its row count comes from the relation, and every target gets
+    * it as one partition — a local scan would otherwise split it into
+    * `defaultParallelism` files per target. Any other frame is rejected
+    * before an append starts.
     *
-    * A poll tick is one JSON document, so its batch is one partition and
+    * A tick is one JSON document, so its batch is one partition and
     * each append is a one-task job: run in turn, the appends would leave
     * all task slots but one idle. The writers are started on the calling
     * thread for this call only, so they inherit its Spark local
@@ -380,11 +379,10 @@ object Fanout {
     * which `StreamingQuery.stop` cancels. Returns only after every
     * started append has returned, also on failure or interrupt (the
     * interrupt status is restored, not passed on to the writers), so a
-    * cached batch is never released under a reader, a replayed batch
-    * never overlaps a writer of the failed attempt, and per-target order
-    * across batches is the call order. An append's `Exception` is
-    * logged and counts as a failed target; any other `Throwable` is
-    * rethrown once all appends have returned.
+    * replayed batch never overlaps a writer of the failed attempt, and
+    * per-target order across batches is the call order. An append's
+    * `Exception` is logged and counts as a failed target; any other
+    * `Throwable` is rethrown once all appends have returned.
     *
     * Every target's append gets the same frame object, so a sink can
     * tell the appends of one batch apart from a new batch by identity:
@@ -393,48 +391,13 @@ object Fanout {
     *
     * @param batchId unique id of this batch (poll tick / micro-batch id),
     *                forwarded per append call
-    * @param writeWorkers cap on the batch's partition count during the
-    *                per-target appends — the config's `write_workers` knob
-    *                (databases.write_workers), honored here as the bound on
-    *                concurrent writer tasks (= JDBC connections) PER
-    *                append; with every target written at once that is at
-    *                most targets × write_workers writer tasks, the
-    *                reference's #db×#table writer goroutines
-    *                (db_manager.go). Spark's task slots cap what actually
-    *                runs. <=0 or None leaves the upstream partitioning
-    *                alone. Coalesce, not repartition: narrows without a
-    *                shuffle. A local batch is written as one partition
-    *                whatever the cap.
-    * @return (targets written successfully, rows in the batch) — the row
-    *         count rides along so callers don't re-execute the plan */
+    * @return (targets written successfully, rows in the batch) */
   def writeBatch(df: DataFrame, targets: Seq[(String, String)],
-      sink: AppendSink, batchId: Long = 0L,
-      writeWorkers: Option[Int] = None): (Int, Long) =
-    ColumnBridgeImpl.localRows(df) match {
-      case Some(rows) => (appendAll(df.coalesce(1), targets, sink, batchId), rows)
-      case None => writeCached(df, targets, sink, batchId, writeWorkers)
-    }
-
-  private def writeCached(df: DataFrame, targets: Seq[(String, String)],
-      sink: AppendSink, batchId: Long, writeWorkers: Option[Int]): (Int, Long) = {
-    val cached = df.persist()
-    try {
-      val rows = cached.count() // materialize once before the per-target writes
-      // The worker cap applies to the APPENDS only: materialization above
-      // ran at full upstream parallelism; coalescing the cached frame is a
-      // narrow read over cached blocks (no recompute, no shuffle).
-      val bounded = writeWorkers.filter(_ > 0) match {
-        case Some(w) => cached.coalesce(w)
-        case None => cached
-      }
-      (appendAll(bounded, targets, sink, batchId), rows)
-    } finally {
-      // unpersist waits on the block manager master, so an interrupted
-      // caller would skip the release: clear the status, then restore it
-      val interrupted = Thread.interrupted()
-      try { cached.unpersist(); () }
-      finally if (interrupted) Thread.currentThread().interrupt()
-    }
+      sink: AppendSink, batchId: Long = 0L): (Int, Long) = {
+    val rows = ColumnBridgeImpl.localRows(df).getOrElse(throw new IllegalArgumentException(
+      "Fanout.writeBatch takes a batch decoded on the driver by OpenSky.parseJson " +
+        s"(a LocalRelation); got ${df.queryExecution.logical.nodeName}"))
+    (appendAll(df.coalesce(1), targets, sink, batchId), rows)
   }
 
   /** One thread per target, started here and joined before returning;

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.graft.ColumnBridgeImpl
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -87,19 +86,6 @@ object OpenSky {
     * state-vector columns; every column nullable. */
   val flightsSchema: StructType = StructType(StructField("time", LongType) +:
     stateColumns.map { case (name, dt) => StructField(name, dt) })
-
-  /** Raw JSON response bodies → one typed row per state vector, decoded
-    * inside each partition by one [[StatesDecoder]] pass per document (the
-    * stream source and DSv2 batches arrive RDD-backed). A malformed body
-    * fails its task. */
-  def parseBatch(spark: SparkSession, raw: Dataset[String]): Dataset[FlightState] = {
-    import spark.implicits._
-    val decoder = StatesDecoder(spark)
-    raw.mapPartitions { bodies =>
-      val toRow = CatalystTypeConverters.createToScalaConverter(flightsSchema)
-      decoder.decode(bodies).map(toRow(_).asInstanceOf[Row])
-    }(Encoders.row(flightsSchema)).as[FlightState]
-  }
 
   /** Response bodies → typed rows, decoded on the driver into a local
     * frame (a `LocalRelation`: its row count is known without a job, and

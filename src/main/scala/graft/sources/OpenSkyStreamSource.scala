@@ -25,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * API bounds the guarantee to at-least-once, same class as the
   * reference).
   *
-  * Emits the raw envelope (`tick`, `raw_json`); `OpenSky.parseBatch` turns
-  * it into typed rows with the poll path's decoder, run inside each
-  * partition (one streaming pass per document, no `from_json`). The
+  * Emits the raw envelope (`tick`, `raw_json`). A micro-batch is one
+  * tick, so `StreamingIngest` collects its one body and decodes it on the
+  * driver with `OpenSky.parseJson`, exactly as a poll tick is decoded. The
   * payload is always the deterministic `OpenSky.sampleResponse`
   * generator: this source has no HTTP read. A live HTTP fetch
   * (`OpenSkyHttpSource`) is read only by `graft.streaming.PollingIngest`;
@@ -67,7 +67,7 @@ final case class TickOffset(tick: Long) extends Offset {
 
 /** One tick per trigger; each tick is a single-partition batch holding one
   * snapshot document (a single HTTP endpoint has nothing to partition —
-  * the document is decoded in that partition downstream). */
+  * the document is decoded on the driver downstream). */
 final class OpenSkyMicroBatchStream(statesPerTick: Int)
     extends MicroBatchStream with SupportsAdmissionControl {
 

@@ -153,8 +153,7 @@ object PollingIngest {
         val batch: Dataset[FlightState] =
           OpenSky.parseJson(spark, Seq(raw))
         val (written, rows) = Fanout.writeBatch(batch.toDF(), targets, sink,
-          batchId = handle.batchBase + handle.ticks + 1, // run-unique id
-          writeWorkers = Some(cfg.databases.writeWorkers))
+          batchId = handle.batchBase + handle.ticks + 1) // run-unique id
         handle.ticks += 1
         handle.rowsIngested += rows
         handle.failedAppends += targets.size - written

@@ -8,9 +8,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.slf4j.LoggerFactory
 
 /** The fully Spark-native ingest (SURVEY §7 M5 complete): DSv2 micro-batch
-  * source → `OpenSky.parseBatch` (the poll path's decoder, run inside each
-  * partition: one pass per document) → foreachBatch multi-table fan-out,
-  * which persists and counts the RDD-backed batch before its appends.
+  * source → foreachBatch, which takes each micro-batch the way
+  * `PollingIngest` takes a poll tick: the source admits one tick per
+  * trigger, so the batch is one `raw_json` body; it is collected to the
+  * driver, decoded by `OpenSky.parseJson` and handed to the same
+  * `Fanout.writeBatch` multi-table fan-out — a body collect and one
+  * parquet write per micro-batch with an [[graft.sink.IdempotentParquetSink]].
   *
   * This is the reference's whole product as one streaming query:
   *  - trigger interval  = plugin_spec.config.interval (A6)
@@ -42,9 +45,9 @@ object StreamingIngest {
     val writer = raw.writeStream
       .trigger(interval)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val flights = OpenSky.parseBatch(spark, batch.select($"raw_json").as[String]).toDF()
-        val (ok, rows) = Fanout.writeBatch(flights, targets, sink, batchId = id,
-          writeWorkers = Some(cfg.databases.writeWorkers))
+        val bodies = batch.select($"raw_json").as[String].collect().toSeq
+        val flights = OpenSky.parseJson(spark, bodies).toDF()
+        val (ok, rows) = Fanout.writeBatch(flights, targets, sink, batchId = id)
         log.info(s"micro-batch $id: $rows rows to $ok/${targets.size} targets")
         // Fail the micro-batch on partial fan-out so Spark replays it from
         // the checkpoint: with an idempotent sink this gives

@@ -123,6 +123,25 @@ class DocsSpec extends AnyFunSuite {
         getClass.getClassLoader)).isFailure)
     assert(dead.isEmpty,
       s"README names tools that do not load: ${dead.toSeq.sorted.mkString(", ")}")
+    // the ingest API README cites: `Object.member` of the ingest objects
+    // and every `*Config` type must still exist
+    def load(name: String) =
+      scala.util.Try(Class.forName(name, false, getClass.getClassLoader)).toOption
+    val ingest = Map("OpenSky" -> "graft.sources", "StatesDecoder" -> "graft.sources",
+      "Fanout" -> "graft.sink", "PollingIngest" -> "graft.streaming",
+      "StreamingIngest" -> "graft.streaming", "IngestConfig" -> "graft.config")
+    val members = raw"`(${ingest.keys.mkString("|")})\.(\w+)".r.findAllMatchIn(readme)
+      .map(m => s"${m.group(1)}.${m.group(2)}").toSet
+    val deadMembers = members.filter { m =>
+      val (obj, member) = m.span(_ != '.')
+      val cls = s"${ingest(obj)}.$obj"
+      !Seq(cls + "$", cls).flatMap(load).exists(_.getMethods.exists(_.getName == member.tail))
+    }
+    val configs = raw"`([A-Z]\w*Config)\b".r.findAllMatchIn(readme).map(_.group(1)).toSet
+    val deadConfigs = configs.filter(c => load(s"graft.config.$c").isEmpty)
+    assert(deadMembers.isEmpty && deadConfigs.isEmpty,
+      s"README names ingest API that does not exist: " +
+        (deadMembers ++ deadConfigs).toSeq.sorted.mkString(", "))
   }
 
   test("SURVEY §8 status line matches the registry") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The full-native DSv2 micro-batch source end-to-end: format() load →
-  * parse pipeline → memory sink, several ticks. */
+  * memory sink, several ticks, the envelopes' bodies → parse pipeline. */
 class DsV2SourceSpec extends AnyFunSuite {
   import TestSession._
 
@@ -15,26 +15,28 @@ class DsV2SourceSpec extends AnyFunSuite {
       .format("graft.sources.OpenSkyStreamSource")
       .option("statesPerTick", "40")
       .load()
-    // same parse pipeline as the batch path, applied to the stream
-    val parsed = OpenSky.parseBatch(spark, raw.select($"raw_json").as[String]).toDF()
-    val q = parsed.writeStream.outputMode("append")
-      .format("memory").queryName("dsv2_flights")
+    val q = raw.writeStream.outputMode("append")
+      .format("memory").queryName("dsv2_envelopes")
       .trigger(Trigger.ProcessingTime("50 milliseconds"))
       .start()
     try {
-      // wait until at least 3 ticks (3 x 40 rows) have landed
+      // wait until at least 3 ticks have landed
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (spark.table("dsv2_flights").count() < 120 && System.nanoTime() < deadline)
+      while (spark.table("dsv2_envelopes").count() < 3 && System.nanoTime() < deadline)
         Thread.sleep(100)
     } finally q.stop()
-    val n = spark.table("dsv2_flights").count()
+    // the same parse a poll tick and StreamingIngest's micro-batch make
+    val bodies = spark.table("dsv2_envelopes").select($"raw_json").as[String].collect().toSeq
+    val flights = OpenSky.parseJson(spark, bodies).toDF()
+    val n = flights.count()
     assert(n >= 120, s"expected >=3 ticks of 40 states, got $n rows")
     assert(n % 40 === 0, "every tick contributes exactly statesPerTick rows")
-    val cols = spark.table("dsv2_flights").columns.toSeq
+    val cols = flights.columns.toSeq
     assert(cols === ("time" +: OpenSky.stateColumns.map(_._1)))
     // distinct snapshot times == number of ticks delivered
-    val ticks = spark.table("dsv2_flights").select($"time").distinct().count()
+    val ticks = flights.select($"time").distinct().count()
     assert(ticks === n / 40)
+    assert(ticks === bodies.size.toLong)
   }
 
   test("Trigger.AvailableNow admits exactly one tick then terminates") {

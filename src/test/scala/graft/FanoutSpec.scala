@@ -1,6 +1,7 @@
 package graft
 
 import graft.sink.{AppendSink, Fanout}
+import graft.sources.OpenSky
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +12,15 @@ import scala.jdk.CollectionConverters._
 /** Fanout.writeBatch's concurrency contract: every target's append runs at
   * once on a writer started by the call, sees the caller's Spark local
   * properties, and has returned before writeBatch does — on failure and on
-  * interrupt too. */
+  * interrupt too. It takes only a batch decoded on the driver. */
 class FanoutSpec extends AnyFunSuite {
   import TestSession._
 
   private val targets = (1 to 4).map(i => (s"db$i", "t"))
-  private def batch: DataFrame = spark.range(0, 10, 1, numPartitions = 1).toDF("v")
-  /** A driver-local batch (a LocalRelation), as a decoded poll tick is. */
+  /** A decoded tick of 10 states, as a poll tick and a micro-batch give. */
+  private def batch: DataFrame =
+    OpenSky.parseJson(spark, Seq(OpenSky.sampleResponse(10))).toDF()
+  /** Any other driver-local batch (a LocalRelation). */
   private def localBatch: DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -116,10 +119,19 @@ class FanoutSpec extends AnyFunSuite {
       }
     }
     val rec = graft.tools.Profile.record(spark)(
-      Fanout.writeBatch(localBatch, targets, sink, writeWorkers = Some(4)))
+      Fanout.writeBatch(localBatch, targets, sink))
     assert(rec.result === ((targets.size, 10L)))
     assert(rec.jobs.isEmpty, s"jobs: ${rec.jobs.map(_.callSite)}")
     assert(parts.asScala.toSeq === Seq.fill(targets.size)(1))
+  }
+
+  test("a frame that is not a decoded batch is rejected before any append") {
+    val appends = new AtomicInteger(0)
+    val sink = sinkOf(_ => { appends.incrementAndGet(); () })
+    val distributed = spark.range(0, 10, 1, numPartitions = 1).toDF("v")
+    val e = intercept[IllegalArgumentException](Fanout.writeBatch(distributed, targets, sink))
+    assert(e.getMessage.contains("OpenSky.parseJson"), e.getMessage)
+    assert(appends.get === 0)
   }
 
   private def errorCase(batch: DataFrame): Unit = {

@@ -37,33 +37,24 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("ingest parse: no from_json or explode in a local tick; an RDD batch decodes once") {
+  test("ingest parse: no from_json or explode in a local tick") {
     import graft.sources.OpenSky
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
-    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation, MapPartitions}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.execution.GenerateExec
-    import spark.implicits._
     val docs = Seq(OpenSky.sampleResponse(5))
     def parses(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
         case j: JsonToStructs => j
       }))
-    // PollingIngest's tick: the body is decoded on the driver into a
-    // LocalRelation, so planning has no parse to fold or run
+    // a poll tick or a micro-batch: the body is decoded on the driver into
+    // a LocalRelation, so planning has no parse to fold or run
     val local = OpenSky.parseJson(spark, docs).toDF()
     assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
       local.queryExecution.optimizedPlan.toString)
     assert(parses(local).isEmpty)
     assert(local.queryExecution.executedPlan.collect { case g: GenerateExec => g }.isEmpty)
     assert(local.count() === 5L)
-    // the stream source and DSv2 hand it an RDD-backed frame: one decoder
-    // pass per partition, which no optimizer rule can duplicate or split
-    val rdd = OpenSky.parseBatch(spark, spark.sparkContext.parallelize(docs).toDS()).toDF()
-    val plan = rdd.queryExecution.optimizedPlan
-    assert(plan.collect { case m: MapPartitions => m }.size === 1, plan.toString)
-    assert(plan.collect { case g: Generate => g }.isEmpty, plan.toString)
-    assert(parses(rdd).isEmpty, plan.toString)
-    assert(rdd.count() === 5L)
   }
 
   test("q02: filters and projection are pushed into the parquet scan") {

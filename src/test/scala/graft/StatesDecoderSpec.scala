@@ -38,8 +38,6 @@ class StatesDecoderSpec extends AnyFunSuite {
   }
 
   private def local(docs: Seq[String]): DataFrame = OpenSky.parseJson(spark, docs).toDF()
-  private def rdd(docs: Seq[String]): DataFrame =
-    OpenSky.parseBatch(spark, spark.sparkContext.parallelize(docs, 2).toDS()).toDF()
 
   /** Rows as sorted strings in which a float is its raw bits. */
   private def bits(rows: Seq[Row]): Seq[String] = rows.map(_.toSeq.map {
@@ -122,26 +120,24 @@ class StatesDecoderSpec extends AnyFunSuite {
   test("decoder parity: the from_json pipeline's rows, float bits included, or its error") {
     val ok = (fixtures ++ special).filter { case (name, body) =>
       val want = outcome(oracle(Seq(body)))
-      Seq("local" -> outcome(local(Seq(body))), "rdd" -> outcome(rdd(Seq(body)))).foreach {
-        case (path, got) => (want, got) match {
-          case (Right(w), Right(g)) => assert(g === w, s"$name ($path)")
-          case (Left(w), Left(g)) =>
-            assert(condition(g) === condition(w), s"$name ($path): $g\nvs the oracle's $w")
-          case _ => fail(s"$name ($path): $got, the oracle $want")
-        }
+      val got = outcome(local(Seq(body)))
+      (want, got) match {
+        case (Right(w), Right(g)) => assert(g === w, name)
+        case (Left(w), Left(g)) =>
+          assert(condition(g) === condition(w), s"$name: $g\nvs the oracle's $w")
+        case _ => fail(s"$name: $got, the oracle $want")
       }
       want.isRight
     }.map(_._2)
     assert(ok.size > fixtures.size) // the oracle throws on only part of the inputs
     // across all of them at once too, as the set comparison the ingest checks use
     val want = oracle(ok)
-    Seq(local(ok), rdd(ok)).foreach { got =>
-      assert(got.schema === want.schema)
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    }
+    val got = local(ok)
+    assert(got.schema === want.schema)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
-  test("decoder: a body that is not a states document throws, whichever path") {
+  test("decoder: a body that is not a states document throws") {
     val truncated = OpenSky.sampleResponse(20)
     Seq("<html><body>502 Bad Gateway</body></html>", truncated.take(truncated.length / 2),
       """{"time": 1""", "", "null", "[]", """{"time": "x", "states": []}""", """{"time": 1.5, "states": []}""",
@@ -149,9 +145,6 @@ class StatesDecoderSpec extends AnyFunSuite {
       """{"time": 1, "states": []} {"time": 2, "states": []}""").foreach { body =>
       val e = intercept[IllegalArgumentException](local(Seq(body)))
       assert(e.getMessage.startsWith("malformed OpenSky states document"), body)
-      val t = intercept[Exception](rdd(Seq(body)).collect())
-      assert(Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
-        .exists(_.isInstanceOf[IllegalArgumentException]), s"$body: $t")
     }
   }
 }
